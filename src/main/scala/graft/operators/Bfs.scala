@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Multi-source breadth-first hop distances over an undirected edge
   * list — "how far is every node from the nearest seed", the reach /
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Same driver-coordinated iteration discipline as [[Components]]:
   * each round is ONE shuffle (frontier→neighbor expansion + anti-join
   * against the visited set), lineage is truncated per round through
-  * [[org.apache.spark.sql.graft.Bridge.truncatedAutoSum]] (reliable
+  * [[org.apache.spark.sql.graft.Bridge.truncate]] (reliable
   * checkpoint on clusters, local blocks in tests, superseded rounds
   * released eagerly), and the convergence scalar rides in the same
   * materialization job as the round itself — no per-row driver work,
@@ -73,11 +74,10 @@ object Bfs {
     val both = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionAll(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var (visited, prevSum, visitedN, release) =
-      org.apache.spark.sql.graft.Bridge.truncatedAutoSumN(
-        seeds.select(col(seedCol).as("node")).distinct()
-          .withColumn("dist", lit(0L)),
-        sumIdx = 1)
+    var visited = Bridge.truncate(
+      seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("dist", lit(0L)),
+      Some("dist"))
     var h = 0
     var done = false
     while (h < maxHops && !done) {
@@ -85,26 +85,21 @@ object Bfs {
       // frontier ≤ visited rows: below the gate, broadcast it so the
       // round scans the edge cache in place (no edge exchange at all);
       // past the gate the plain join shuffles both sides as before
-      val frontier0 = visited.filter(col("dist") === h - 1)
+      val frontier0 = visited.df.filter(col("dist") === h - 1)
       val frontier =
-        if (visitedN <= broadcastVisited) broadcast(frontier0) else frontier0
+        if (visited.rows <= broadcastVisited) broadcast(frontier0) else frontier0
       val newNodes = both
         .join(frontier, col("u") === col("node"))
         .select(col("v").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
+        .join(visited.df, Seq("node"), "left_anti")
         .withColumn("dist", lit(h.toLong))
-      val (next, nextSum, nextN, nextRelease) =
-        org.apache.spark.sql.graft.Bridge.truncatedAutoSumN(
-          visited.unionAll(newNodes), sumIdx = 1)
-      release()
+      val next = Bridge.truncate(visited.df.unionAll(newNodes), Some("dist"))
+      visited.release()
+      done = next.sum.compareTo(visited.sum) == 0
       visited = next
-      visitedN = nextN
-      release = nextRelease
-      done = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
     }
     both.unpersist()
     lastRounds = h
-    visited
+    visited.df
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Connected components over an undirected edge list via min-label
   * propagation — the step that turns near-dup PAIRS into dedup
@@ -14,22 +15,6 @@ import org.apache.spark.sql.functions._
   * GraphX/GraphFrames run internally), with no per-row driver work.
   */
 object Components {
-
-  /** Lineage truncation for the iterative loop, pluggable by runtime:
-    * with a checkpoint dir set (cluster deployment) use reliable
-    * checkpointing — survives executor loss; without one (local/test)
-    * checkpoint to local blocks. BOTH paths hand back a release so
-    * each round frees its superseded predecessor deterministically:
-    * blocks would otherwise pile up until GC notices, and reliable
-    * checkpoint files are never reaped at all by default
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints` is false) —
-    * an N-round run would leave N full label snapshots on disk. The
-    * convergence scalar (exact sum of the `comp` column, index 1)
-    * rides in the SAME materialization job — one action per round,
-    * not materialize-then-aggregate. */
-  private def truncate(df: DataFrame)
-      : (DataFrame, java.math.BigInteger, () => Unit) =
-    org.apache.spark.sql.graft.Bridge.truncatedAutoSum(df, sumIdx = 1)
 
   /** Rounds the last [[connectedComponents]] call needed — diagnostic
     * for scale tests (ComponentsSpec pins the growth rate: the
@@ -55,38 +40,42 @@ object Components {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // truncate (not persist): iterative self-reference would
     // otherwise grow the logical plan exponentially — each round must
-    // cut lineage, not just cache data.
+    // cut lineage, not just cache data. Bridge.truncate picks reliable
+    // files or local blocks from the checkpoint dir, and each round
+    // releases its superseded predecessor as soon as the next one is
+    // materialized (blocks would otherwise pile up until GC notices;
+    // reliable files are never reaped by default).
     // Convergence check: min-propagation only ever DECREASES labels,
     // so the label sum strictly decreases until the fixpoint — and the
     // sum comes fused out of each round's materialization job (exact
     // BigInteger accumulation; an empty label set sums to zero).
-    var (labels, prevSum, release) = truncate(
-      both.select(col("a").as("id")).distinct().withColumn("comp", col("id")))
+    var labels = Bridge.truncate(
+      both.select(col("a").as("id")).distinct().withColumn("comp", col("id")),
+      Some("comp"))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
       // neighbor minimum ∪ own label
       val neighborMin = both
-        .join(labels, col("b") === col("id"))
+        .join(labels.df, col("b") === col("id"))
         .groupBy(col("a")).agg(min(col("comp")).as("n_comp"))
-      val propagated = labels
+      val propagated = labels.df
         .join(neighborMin, col("id") === col("a"), "left_outer")
         .select(col("id"),
           least(col("comp"), coalesce(col("n_comp"), col("comp"))).as("c1"))
       // pointer jump: also adopt the label OF my label (comp values are
       // always node ids within the same component, so this is safe and
       // cuts rounds from O(diameter) to O(log diameter))
-      val (next, nextSum, nextRelease) = truncate(propagated
-        .join(labels.select(col("id").as("jid"), col("comp").as("jcomp")),
+      val next = Bridge.truncate(propagated
+        .join(labels.df.select(col("id").as("jid"), col("comp").as("jcomp")),
           col("c1") === col("jid"), "left_outer")
-        .select(col("id"), least(col("c1"), coalesce(col("jcomp"), col("c1"))).as("comp")))
+        .select(col("id"), least(col("c1"), coalesce(col("jcomp"), col("c1"))).as("comp")),
+        Some("comp"))
       // `next` is eagerly materialized: the previous round's blocks
       // have no remaining consumer — free them now, don't wait for GC.
-      release()
+      labels.release()
+      converged = next.sum.compareTo(labels.sum) == 0
       labels = next
-      release = nextRelease
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
       iter += 1
     }
     both.unpersist()
@@ -97,7 +86,7 @@ object Components {
     if (!converged) throw new IllegalStateException(
       s"connectedComponents: not converged after $maxIter rounds " +
         "(component diameter exceeds maxIter); raise maxIter")
-    labels
+    labels.df
   }
 
   /** Full dedup resolution: every doc mapped to the canonical (min id)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** EXACT interpolated percentiles at scale — the two-pass bucketed
   * alternative to Spark's `percentile()`, whose aggregation buffer
@@ -26,12 +27,6 @@ import org.apache.spark.sql.functions._
   * crosses an integer, i.e. when adjacent values are equal anyway.
   */
 object ExactPercentiles {
-
-  /** Checkpoint-dir-aware truncation of the operator's BOUNDED frames
-    * (counts/hist/med — state ∝ groups / groups×buckets): reliable
-    * files when a dir is set (cluster), local blocks otherwise. */
-  private def truncB(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.Bridge.truncateBounded(df)
 
   /** Exact LOWER weighted median per group — the smallest value whose
     * cumulative weight reaches half the group's total — with the same
@@ -59,7 +54,7 @@ object ExactPercentiles {
         sum(col("wb")).over(Window.partitionBy("g").orderBy("b")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .withColumn("tot", sum(col("wb")).over(Window.partitionBy("g")))
-      .transform(truncB)
+      .transform(Bridge.truncateBounded)
     // monotone crossing: the unique first bucket where 2·cum ≥ W
     val target = hist
       .filter(lit(2) * (col("cum_before") + col("wb")) >= col("tot"))
@@ -102,7 +97,7 @@ object ExactPercentiles {
         sum(col("wb")).over(Window.partitionBy("g").orderBy("b")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .withColumn("tot", sum(col("wb")).over(Window.partitionBy("g")))
-      .transform(truncB)
+      .transform(Bridge.truncateBounded)
     val ranks = hist.select(col("g"), col("b"), col("cum_before"),
         col("wb"), col("tot"),
         explode(array(qs.map { case (label, num, den) =>
@@ -169,7 +164,7 @@ object ExactPercentiles {
     // of the outer compute()'s base references
     val med = compute(base, "g", "v", Seq(("50", 0.5)), bucketWidthV)
       .select(col("g"), round(col("p_50"), roundMed).as("med"))
-      .transform(truncB)
+      .transform(Bridge.truncateBounded)
     val dev = base.join(broadcast(med), "g")
       .withColumn("adev", abs(col("v") - col("med")))
     compute(dev, "g", "adev", Seq(("50", 0.5)), bucketWidthD)
@@ -188,18 +183,18 @@ object ExactPercentiles {
     // references them through located/needed/boundary/wide so many
     // times that each reference re-expanded into its own full base
     // scan + aggregation (q76's composed plan reached 84 parquet scans
-    // / 110 exchanges before this). truncB pins each to ONE
+    // / 110 exchanges before this). truncateBounded pins each to ONE
     // scan + aggregation; the deliberate re-scan posture (see [[mad]]'s
     // measured note) applies to the CORPUS-sized base, which stays
     // uncached — pass 2 still re-scans storage.
     val counts = base.groupBy("g").agg(count(lit(1)).as("n"))
-      .transform(truncB)
+      .transform(Bridge.truncateBounded)
     // bounded frame: value-range/bucketWidth buckets per group
     val hist = base.groupBy("g", "b").agg(count(lit(1)).as("c"))
       .withColumn("cum_before", coalesce(
         sum(col("c")).over(Window.partitionBy("g").orderBy("b")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .transform(truncB)
+      .transform(Bridge.truncateBounded)
     // per (group, quantile): the two boundary ranks and the fraction
     val targets = counts.select(col("g"), col("n"),
       explode(array(qs.map { case (label, q) =>

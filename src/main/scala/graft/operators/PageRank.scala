@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** PageRank over an edge list in INTEGER fixed-point — web-graph
   * centrality as a deterministic, oracle-replayable operator (the
@@ -38,10 +39,6 @@ import org.apache.spark.sql.functions._
   * a long: q·n_nodes·dampNum < 2⁶³.
   */
 object PageRank {
-
-  private def truncate(df: DataFrame)
-      : (DataFrame, java.math.BigInteger, () => Unit) =
-    org.apache.spark.sql.graft.Bridge.truncatedAutoSum(df, sumIdx = 1)
 
   /** @param edges   (srcCol, dstCol) long node ids; see contract above
     * @param iters   fixed iteration count (part of the semantics)
@@ -92,20 +89,14 @@ object PageRank {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum > 0 && dampNum < dampDen,
       s"damping num/den must satisfy 0 < num < den, got $dampNum/$dampDen")
-    // Degree table first, NODE-sized, with the node count FUSED into
-    // its materialization (truncatedAutoSum's sum over a ones column) —
-    // the previous shape paid a separate countDistinct job over the
-    // edge snapshot AND re-shuffled the edges for the init table's
-    // distinct. The symmetrized-input contract (outdegree ≥ 1 for
-    // every node) makes the degree keys exactly the node universe, so
-    // init ranks read the degree blocks directly.
+    // Degree table first, NODE-sized: its truncation's row count is
+    // the node count, so no count job and no edge-list distinct runs.
+    // The symmetrized-input contract (outdegree ≥ 1 for every node)
+    // makes the degree keys exactly the node universe, so init ranks
+    // read the degree blocks directly.
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val (degT, nBig, releaseDeg) = org.apache.spark.sql.graft.Bridge
-      .truncatedAutoSum(
-        e0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .withColumn("__one", lit(1L)),
-        sumIdx = 2)
-    val n = nBig.longValueExact()
+    val Bridge.Truncated(degT, _, n, releaseDeg) = Bridge.truncate(
+      e0.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     // Degree folds INTO the edge list once: each iteration then joins
     // one static table instead of two, and the per-edge division
     // `r DIV deg` happens inside the aggregation projection. The
@@ -113,9 +104,8 @@ object PageRank {
     // the per-round rank broadcasts, so building the edge snapshot
     // never shuffles the raw edges at all in that regime.
     val bcRanks = n > 0 && n <= broadcastNodes
-    val degJ = degT.select(col("src"), col("deg"))
-    val (ed, _, releaseED) = truncate(
-      e0.join(if (bcRanks) broadcast(degJ) else degJ, "src")
+    val Bridge.Truncated(ed, _, _, releaseED) = Bridge.truncate(
+      e0.join(if (bcRanks) broadcast(degT) else degT, "src")
         .select(col("src"), col("dst"), col("deg")))
     // From here the edge snapshot is on disk/blocks — any failure must
     // release it (and the current round) or the checkpoint leaks:
@@ -167,13 +157,13 @@ object PageRank {
         // barrier is dearer still). Scope it off for the chain only;
         // the shuffle-join tier keeps AQE (skew-join handling matters
         // there).
-        val (t, _, rel) =
-          if (bcRanks) withAqeOff(ed.sparkSession)(truncate(chained))
-          else truncate(chained)
+        val t =
+          if (bcRanks) withAqeOff(ed.sparkSession)(Bridge.truncate(chained))
+          else Bridge.truncate(chained)
         release()
         if (k == 1) releaseDeg() // init consumed by the first chain
-        ranks = t
-        release = rel
+        ranks = t.df
+        release = t.release
         k += step
       }
       if (!wantDelta) (ranks, None)
@@ -181,7 +171,7 @@ object PageRank {
         // ranks here = r_{iters-1} (for iters == 1, the r_0 init plan)
         val prev = ranks
         val prevRelease = release
-        val (fin, _, relFin) = truncate(round(prev))
+        val Bridge.Truncated(fin, _, _, relFin) = Bridge.truncate(round(prev))
         release = () => { prevRelease(); relFin() } // failure path frees both
         val delta = fin.as("a")
           .join(prev.as("b"), col("a.v") === col("b.v"))

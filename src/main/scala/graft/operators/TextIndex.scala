@@ -272,8 +272,7 @@ object TextIndex {
     * corpus. Identical math to the s21 lexical arm over the same
     * corpus, so search-of-stored hash-matches the batch recompute. */
   def searchBm25(sp: SparkSession, store: String, queries: DataFrame,
-      k: Int, termPruneLimit: Long = TermPruneLimit,
-      truncate: Boolean = true): DataFrame = {
+      k: Int, termPruneLimit: Long = TermPruneLimit): DataFrame = {
     val qterms = queries
       .select(col("doc_id").as("q_id"),
         explode(split(col("text"), " ")).as("word"))
@@ -301,14 +300,8 @@ object TextIndex {
     // un-truncated each reference re-ran the pruned postings scan.
     // Truncation (checkpoint-dir-aware) pins it to ONE scan; at 100 TB
     // that halves the postings I/O per probe batch.
-    // (`truncate = false` keeps the lazy single plan — the spec that
-    // audits the scan's bucket/word pushdown reads it there, since a
-    // truncated plan starts at the snapshot and hides the scan)
-    val matchedLazy = postings.join(broadcast(qterms), "word")
-    val matched =
-      if (truncate)
-        org.apache.spark.sql.graft.Bridge.truncateBounded(matchedLazy)
-      else matchedLazy
+    val matched = org.apache.spark.sql.graft.Bridge.truncateBounded(
+      postings.join(broadcast(qterms), "word"))
     // df re-derives additively from the matched postings themselves:
     // installments are disjoint by doc, so COUNT per word over the
     // pruned scan IS the corpus df — no stored dictionary to maintain.

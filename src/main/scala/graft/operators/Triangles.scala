@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Distributed triangle counting via degree-ordered edge orientation
   * (the MapReduce-era standard: Suri & Vassilvitskii's "Counting
@@ -64,44 +65,34 @@ object Triangles {
       s"bloomLitBits must be in (0, 2^30], got $bloomLitBits")
     // Materialize edge list → degrees → oriented list once (Components
     // block discipline): the oriented list feeds both wedge-join sides
-    // AND the Bloom build, and the fused count from its
-    // materialization sizes the filter without an extra pass. Raw
-    // edge blocks are released as soon as the derived tables exist.
-    // (Int ids are cast up front: the truncation's fused sum reads a
-    // raw 8-byte LONG slot.)
-    val (edges, _, releaseEdges) = org.apache.spark.sql.graft.Bridge
-      .truncatedAutoSum(
-        edges0.select(col("u").cast("long").as("u"),
-          col("v").cast("long").as("v")),
-        sumIdx = 0)
-    val (deg, _, _) = org.apache.spark.sql.graft.Bridge.truncatedAutoSum(
+    // AND the Bloom build, and the row count from its materialization
+    // sizes the filter without an extra pass. Raw edge blocks are
+    // released as soon as the derived tables exist.
+    val Bridge.Truncated(edges, _, _, releaseEdges) = Bridge.truncate(
+      edges0.select(col("u").cast("long").as("u"),
+        col("v").cast("long").as("v")))
+    val deg = Bridge.truncate(
       edges.select(col("u").as("node"))
         .union(edges.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg")),
-      sumIdx = 1)
+        .groupBy("node").agg(count(lit(1)).as("deg"))).df
     // the (deg, node) total order is compared LEXICOGRAPHICALLY as two
     // columns — an earlier packing into deg·2³² + node silently
     // collided once node ids crossed 2³² (two distinct nodes can pack
     // equal, corrupting the orientation's antisymmetry), a bound the
     // sf~10 key-shifted ids actually exceed
-    val (orientedW, mBig, _) = org.apache.spark.sql.graft.Bridge
-      .truncatedAutoSum(
-        edges
-          .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-          .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-          .select(
-            (col("du") < col("dv") ||
-              (col("du") === col("dv") && col("u") < col("v"))).as("uFirst"),
-            col("u"), col("v"), col("du"), col("dv"))
-          .select(
-            when(col("uFirst"), col("u")).otherwise(col("v")).as("s"),
-            when(col("uFirst"), col("v")).otherwise(col("u")).as("t"),
-            when(col("uFirst"), col("dv")).otherwise(col("du")).as("td"))
-          .withColumn("__one", lit(1L)),
-        sumIdx = 3)
+    val Bridge.Truncated(oriented, _, m, _) = Bridge.truncate(
+      edges
+        .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
+        .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
+        .select(
+          (col("du") < col("dv") ||
+            (col("du") === col("dv") && col("u") < col("v"))).as("uFirst"),
+          col("u"), col("v"), col("du"), col("dv"))
+        .select(
+          when(col("uFirst"), col("u")).otherwise(col("v")).as("s"),
+          when(col("uFirst"), col("v")).otherwise(col("u")).as("t"),
+          when(col("uFirst"), col("dv")).otherwise(col("du")).as("td")))
     releaseEdges() // deg + oriented blocks carry everything downstream
-    val oriented = orientedW.drop("__one")
-    val m = mBig.longValueExact() // oriented edge count, fused: no extra job
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.s") === col("e2.s") &&
           (col("e1.td") < col("e2.td") ||

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Graph / sequence analytics (q99+): event-stream Markov transitions
   * and degree-ordered triangle counting over the co-purchase graph.
@@ -150,12 +151,10 @@ object GraphQueries {
       // release the edge blocks as soon as the BFS rounds and the
       // node-sized tables are materialized; only node-cardinality
       // blocks outlive the call (the Bfs.visited precedent).
-      val (edges, _, releaseEdges) =
-        org.apache.spark.sql.graft.Bridge.truncatedAutoSum(edges0, sumIdx = 0)
-      val (nodes, _, _) = org.apache.spark.sql.graft.Bridge.truncatedAutoSum(
+      val Bridge.Truncated(edges, _, _, releaseEdges) = Bridge.truncate(edges0)
+      val nodes = Bridge.truncate(
         edges.select(col("u").as("node"))
-          .unionAll(edges.select(col("v").as("node"))).distinct(),
-        sumIdx = 0)
+          .unionAll(edges.select(col("v").as("node"))).distinct()).df
       val seeds = nodes.filter(pmod(col("node"), lit(100L)) === 0)
       val bfs =
         try graft.operators.Bfs.hopDistances(

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.sources.{BucketedWriter, IngestFixtures, Sinks}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Semi-structured ingest entries (SURVEY.md §2 sources): the same
@@ -819,7 +820,7 @@ object IngestQueries {
           val q = sp.readStream.schema(schema).parquet(land)
             .writeStream
             .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              val b = batch.localCheckpoint(true)
+              val b = Bridge.truncateBounded(batch)
               Sinks.upsertJdbc(sp, b, url, table,
                 keyCols = Seq("doc_id"), versionCol = "version",
                 numPartitions = 2)
@@ -1289,7 +1290,7 @@ object IngestQueries {
           val q = sp.readStream.schema(schema).parquet(land)
             .writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              Sinks.upsertBatchExactlyOnce(sp, b.localCheckpoint(true), id,
+              Sinks.upsertBatchExactlyOnce(sp, Bridge.truncateBounded(b), id,
                 url, table, keyCols = Seq("doc_id"), versionCol = "version",
                 numPartitions = 2, partCol = Some("source"))
               ()
@@ -2092,7 +2093,7 @@ object IngestQueries {
           val q = sp.readStream.schema(schema).parquet(land)
             .writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              Sinks.upsertBatchExactlyOnce(sp, b.localCheckpoint(true), id,
+              Sinks.upsertBatchExactlyOnce(sp, Bridge.truncateBounded(b), id,
                 url, table, keyCols = Seq("o_orderkey"), versionCol = "seq",
                 numPartitions = 2, partCol = Some("pgrp"),
                 opCol = Some("op"))
@@ -2302,7 +2303,7 @@ object IngestQueries {
           val q = sp.readStream.schema(schema).parquet(land)
             .writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              TxLog.appendBatch(b.localCheckpoint(true), id, store)
+              TxLog.appendBatch(Bridge.truncateBounded(b), id, store)
               ()
             }
             .option("checkpointLocation", ckpt)
@@ -2807,7 +2808,7 @@ object IngestQueries {
             .writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
               TxLog.appendBatch(
-                b.withColumn("stream_batch", lit(id)).localCheckpoint(true),
+                Bridge.truncateBounded(b.withColumn("stream_batch", lit(id))),
                 id, out)
               ()
             }
@@ -3068,7 +3069,7 @@ object IngestQueries {
             .writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
               TxLog.appendBatch(
-                b.withColumn("stream_batch", lit(id)).localCheckpoint(true),
+                Bridge.truncateBounded(b.withColumn("stream_batch", lit(id))),
                 id, out)
               ()
             }
@@ -3219,7 +3220,7 @@ object IngestQueries {
         val q = sp.readStream.format(fmt).option("cdf", "true").load(store)
           .writeStream
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            TxLog.appendBatch(b.localCheckpoint(true), id, out)
+            TxLog.appendBatch(Bridge.truncateBounded(b), id, out)
             ()
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -5065,8 +5066,8 @@ object IngestQueries {
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
               if (!b.isEmpty)
                 TxLog.appendBatch(
-                  b.withColumn("stream_batch", lit(id))
-                    .localCheckpoint(true), id, out)
+                  Bridge.truncateBounded(
+                    b.withColumn("stream_batch", lit(id))), id, out)
               ()
             }
             .option("checkpointLocation", ckpt)

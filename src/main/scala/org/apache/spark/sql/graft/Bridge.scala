@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge into Spark's package-private Column ⇄ Expression
   * converters (`org.apache.spark.sql.classic.ExpressionUtils`), so
@@ -45,14 +47,11 @@ object Bridge {
     try f finally sc.checkpointDir = prev
   }
 
-  /** The materialization action for the truncation helpers below,
-    * fused with an exact sum of a long column — an iterative driver
-    * loop (graft.operators.Components) needs a convergence scalar
-    * every round, and computing it during the materialization pass
-    * halves the jobs per round versus materialize-then-aggregate.
-    * Long-chunked BigInteger accumulation: exact at any node count
-    * (the decimal-overflow rationale: 10^9 nodes × 10^18-sized ids
-    * overflow a plain long sum), order-independent. */
+  /** The materialization action of [[truncate]]: one job that counts
+    * the rows and, for `sumIdx >= 0`, sums that LONG column exactly.
+    * Long-chunked BigInteger accumulation: exact at any row count
+    * (10^9 rows × 10^18-sized ids overflow a plain long sum),
+    * independent of partition order. */
   private def materializeWithSum(
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       sumIdx: Int): (java.math.BigInteger, Long) =
@@ -63,7 +62,7 @@ object Bridge {
       while (it.hasNext) {
         val r = it.next()
         n += 1
-        if (!r.isNullAt(sumIdx)) {
+        if (sumIdx >= 0 && !r.isNullAt(sumIdx)) {
           val v = r.getLong(sumIdx)
           if ((v > 0 && acc > Long.MaxValue - v) ||
               (v < 0 && acc < Long.MinValue - v)) {
@@ -76,131 +75,85 @@ object Bridge {
       (s1.add(s2), n1 + n2)
     }
 
-  /** Local lineage truncation with an explicit block-release handle.
-    *
-    * `Dataset.localCheckpoint` persists the materialized rows but gives
-    * the caller no way to free them — in an iterative algorithm the
-    * superseded rounds' blocks pile up until a GC-driven ContextCleaner
-    * pass. This does what `localCheckpoint(eager = true)` does (copy
-    * the unsafe rows, localCheckpoint the internal RDD, materialize),
-    * but returns the RDD's `unpersist` so each round can free its
-    * predecessor deterministically — plus the fused exact sum of the
-    * long column at `sumIdx`. Safe to call the release only once every
-    * downstream consumer has moved to a newer frame — after truncation
-    * the RDD cannot be recomputed. */
-  def truncatedLocalSum(df: org.apache.spark.sql.DataFrame, sumIdx: Int)
-      : (org.apache.spark.sql.DataFrame, java.math.BigInteger, () => Unit) = {
-    val (out, sum, _, release) = truncatedLocalSumN(df, sumIdx)
-    (out, sum, release)
-  }
+  /** The result of [[truncate]]: the snapshot frame, the exact sum of
+    * the requested LONG column (zero when none was asked for), the row
+    * count, and the handle that frees the snapshot. */
+  final case class Truncated(df: DataFrame, sum: java.math.BigInteger,
+      rows: Long, release: () => Unit)
 
-  /** [[truncatedLocalSum]] plus the ROW COUNT, fused into the same
-    * materialization pass — iterative operators that gate a per-round
-    * join strategy on the frame's size (Bfs frontier broadcasts) read
-    * it for free instead of paying a count job. */
-  def truncatedLocalSumN(df: org.apache.spark.sql.DataFrame, sumIdx: Int)
-      : (org.apache.spark.sql.DataFrame, java.math.BigInteger, Long,
-        () => Unit) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+  /** Lineage truncation for iterative loops, with an explicit release
+    * handle and one fused scalar pass.
+    *
+    * Dispatch is on the context's checkpoint dir: reliable files when
+    * one is set (survives executor loss — cluster deployment), local
+    * blocks otherwise (local/test). Neither `Dataset.localCheckpoint`
+    * nor `Dataset.checkpoint` lets the caller free its snapshot:
+    * superseded local blocks pile up until a GC-driven ContextCleaner
+    * pass, and reliable files are never reaped unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` is on (default
+    * false) — an N-round loop would keep N full copies of its state.
+    * `release` frees the blocks or deletes the files deterministically;
+    * call it only once every consumer has moved to a newer frame (the
+    * snapshot cannot be recomputed). In reliable mode the RDD is cached
+    * across the materialization so the checkpoint write reads the
+    * cache instead of recomputing the lineage (RDD.checkpoint's
+    * documented pitfall); the cache is dropped once the file exists.
+    *
+    * The materialization job also counts the rows and, when `sumCol`
+    * is given, sums that column exactly — a convergence scalar or a
+    * broadcast gate comes out of the same job instead of a second
+    * action. The sum reads the raw 8-byte slot (InternalRow.getLong),
+    * so a non-LONG column would be misread silently: it is refused. */
+  def truncate(df: DataFrame, sumCol: Option[String] = None): Truncated = {
+    val sumIdx = sumCol.fold(-1) { c =>
+      val i = df.schema.fieldIndex(c)
+      require(df.schema(i).dataType == LongType,
+        s"truncate needs a LONG sum column, `$c` is ${df.schema(i).dataType}")
+      i
+    }
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val sc = ds.sparkSession.sparkContext
+    val reliable = sc.getCheckpointDir.isDefined
     // unsafe rows are reused by the scan — copy before persisting,
     // exactly as Dataset.checkpoint does
     val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val (sum, n) = materializeWithSum(rdd, sumIdx)
+    if (reliable) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    val (sum, rows) = materializeWithSum(rdd, sumIdx) // writes the checkpoint
     val out = ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
-    (out, sum, n, () => { rdd.unpersist(blocking = false); () })
-  }
-
-  /** Reliable lineage truncation with an explicit file-release handle.
-    *
-    * `Dataset.checkpoint(eager = true)` leaves every round's snapshot
-    * on the checkpoint dir: the ContextCleaner only deletes checkpoint
-    * files when `spark.cleaner.referenceTracking.cleanCheckpoints` is
-    * on (default FALSE) — an iterative loop would otherwise write one
-    * full copy of its state per round and delete none. Same shape as
-    * [[truncatedLocalSum]]: the release deletes the superseded round's
-    * files deterministically; call it only once every consumer has
-    * moved to a newer frame (the data is gone afterwards). The RDD is
-    * cached across the materialize action so the checkpoint write
-    * reads the cache instead of recomputing the whole round's lineage
-    * (RDD.checkpoint's documented recomputation pitfall); the cache is
-    * dropped as soon as the file is written. Requires a checkpoint dir
-    * on the context. */
-  def truncatedReliableSum(df: org.apache.spark.sql.DataFrame, sumIdx: Int)
-      : (org.apache.spark.sql.DataFrame, java.math.BigInteger, () => Unit) = {
-    val (out, sum, _, release) = truncatedReliableSumN(df, sumIdx)
-    (out, sum, release)
-  }
-
-  /** [[truncatedReliableSum]] plus the fused row count (see
-    * [[truncatedLocalSumN]]). */
-  def truncatedReliableSumN(df: org.apache.spark.sql.DataFrame, sumIdx: Int)
-      : (org.apache.spark.sql.DataFrame, java.math.BigInteger, Long,
-        () => Unit) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val sc = ds.sparkSession.sparkContext
-    require(sc.getCheckpointDir.isDefined,
-      "truncatedReliableSum needs SparkContext.setCheckpointDir")
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.checkpoint()
-    val (sum, n) = materializeWithSum(rdd, sumIdx) // also writes the checkpoint
-    val out = ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
-    val release = () => rdd.getCheckpointFile.foreach { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-    }
-    rdd.unpersist(blocking = false)            // reads now hit the file
-    (out, sum, n, release)
-  }
-
-  /** Checkpoint-dir dispatch shared by the iterative operators
-    * (Components, PageRank): reliable truncation when a dir is set
-    * (survives executor loss — cluster deployment), local blocks
-    * otherwise (local/test). The fused sum reads the raw 8-byte slot
-    * at `sumIdx` (InternalRow.getLong) — a non-long column there would
-    * be misread SILENTLY, so refuse it here for every caller. */
-  def truncatedAutoSum(df: org.apache.spark.sql.DataFrame, sumIdx: Int)
-      : (org.apache.spark.sql.DataFrame, java.math.BigInteger, () => Unit) = {
-    val (out, sum, _, release) = truncatedAutoSumN(df, sumIdx)
-    (out, sum, release)
-  }
-
-  /** [[truncatedAutoSum]] plus the fused row count (see
-    * [[truncatedLocalSumN]]). */
-  def truncatedAutoSumN(df: org.apache.spark.sql.DataFrame, sumIdx: Int)
-      : (org.apache.spark.sql.DataFrame, java.math.BigInteger, Long,
-        () => Unit) = {
-    require(df.schema(sumIdx).dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"truncatedAutoSum needs a LONG column at $sumIdx, " +
-        s"got ${df.schema(sumIdx).dataType}")
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      truncatedReliableSumN(df, sumIdx)
-    else truncatedLocalSumN(df, sumIdx)
+    val release: () => Unit =
+      if (reliable) {
+        rdd.unpersist(blocking = false) // reads now hit the file
+        () => rdd.getCheckpointFile.foreach { p =>
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
+        }
+      } else () => { rdd.unpersist(blocking = false); () }
+    Truncated(out, sum, rows, release)
   }
 
   /** Lineage truncation for BOUNDED frames (cardinality ∝ groups /
     * groups×buckets, never row count) that stay referenced by the
     * RETURNED lazy plan — so no release handle is possible and the
-    * snapshot must survive until the consumer's action. Dispatch
-    * mirrors [[truncatedAutoSum]]: a reliable checkpoint when the
-    * context has a checkpoint dir (survives executor loss — the
-    * cluster deployment; `Dataset.checkpoint`'s files are reaped by
+    * snapshot must survive until the consumer's action. Same dispatch
+    * as [[truncate]]: a reliable checkpoint when the context has a
+    * checkpoint dir (`Dataset.checkpoint`'s files are reaped by
     * ContextCleaner only under
     * `spark.cleaner.referenceTracking.cleanCheckpoints`, which a
     * deployment setting a dir should enable), executor-local blocks
-    * otherwise (local/test — identical plan to the previous bare
-    * `localCheckpoint(true)` call sites). */
-  def truncateBounded(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+    * otherwise. Unlike [[truncate]] it goes through the Dataset API,
+    * which keeps the frame's output partitioning on the snapshot (a
+    * banded self-join over it plans no re-shuffle). */
+  def truncateBounded(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
 
   /** Every persistent RDD in the context that is LOCALLY CHECKPOINTED
-    * — the executor-pinned snapshots that per-call lineage truncation
-    * ([[truncateBounded]], [[truncatedLocalSum]]) leaves behind when
+    * — the executor-pinned snapshots that local-mode lineage truncation
+    * ([[truncateBounded]], [[truncate]]) leaves behind when
     * the call site cannot own a release (the snapshot feeds a lazy
     * plan returned to the caller). A session-long driver (Bench,
     * Verify) sweeps these BETWEEN entries: once an entry's action has

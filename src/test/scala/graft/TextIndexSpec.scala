@@ -81,27 +81,50 @@ class TextIndexSpec extends SparkSpec {
     // source's absence from the plan is meaningful
     val qpath = tmpStore("prune") + "_queries"
     queries.write.mode("overwrite").parquet(qpath)
-    // truncate = false: the default truncation pins the Σ df-bounded
-    // matched frame to one scan, which also hides that scan from the
-    // FINAL plan — the pushdown contract is audited on the lazy form,
-    // and result equality with the default form is asserted below
-    val res = TextIndex.searchBm25(spark, store,
-      spark.read.parquet(qpath), k = 10, truncate = false)
-    val p = res.queryExecution.executedPlan.toString
+    // the Σ df-bounded matched frame is truncated while the search is
+    // built, so the returned plan starts at the snapshot: the pushdown
+    // contract is audited on the plan of the truncation's own
+    // execution (Dataset.localCheckpoint runs under withAction, which
+    // reports it to QueryExecutionListeners)
+    val ckPlans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (fn == "localCheckpoint")
+          ckPlans.synchronized(ckPlans += qe.executedPlan.toString)
+      def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val res =
+      try TextIndex.searchBm25(spark, store, spark.read.parquet(qpath), k = 10)
+      finally {
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(
+          spark.sparkContext, 60000L)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(ckPlans.size === 1, "expected exactly one truncation of the matched frame")
+    val scan = ckPlans.head
+    val p = scan + res.queryExecution.executedPlan.toString
     assert(!p.contains("documents.parquet"),
       "search plan must read only the store and the query frame")
     assert(!p.contains("doclen"),
       "search must never scan a corpus-proportional doc-length table " +
         "(dl is denormalized into the posting rows)")
-    assert(p.contains("bucket"), "bucket partition filter missing")
-    assert("PushedFilters: \\[[^\\]]*word".r.findFirstIn(p).isDefined,
+    assert(scan.contains("bucket"), "bucket partition filter missing")
+    assert("PushedFilters: \\[[^\\]]*word".r.findFirstIn(scan).isDefined,
       "word IN-list did not push down to the postings scan")
     assert(res.limit(1).count() === 1)
-    // the default (truncated) execution returns the identical rows
+    // the reliable-checkpoint truncation (checkpoint dir set) returns
+    // the identical rows
     val want = res.collect().map(_.toString).sorted
-    val got = TextIndex.searchBm25(spark, store,
-        spark.read.parquet(qpath), k = 10)
-      .collect().map(_.toString).sorted
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    val got = org.apache.spark.sql.graft.Bridge.withCheckpointDir(
+        spark.sparkContext, Some(ckDir)) {
+      TextIndex.searchBm25(spark, store, spark.read.parquet(qpath), k = 10)
+        .collect().map(_.toString).sorted
+    }
     assert(got === want)
   }
 
