@@ -70,16 +70,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // Warm the JVM/codegen/scan paths once so per-query timings measure
     // the queries, not first-query JIT + session init. e01/e02 warm-up
     // also materializes the CSV/JSON fixtures OUTSIDE the timed region.
@@ -89,14 +80,14 @@ object Bench {
     // The documents/dedup family gets the same treatment: the FIRST
     // documents parquet scan + the text-kernel codegen (shingle/
     // minhash/simhash) otherwise land on whichever d-entry runs first
-    // (r8: d01 timed 31.0 s vs ProfileQ warm 0.38 s; d07 drifted
+    // (r8: d01 timed 31.0 s vs 0.38 s warm; d07 drifted
     // 5 → 9.4 → 12.3 s across rounds for the same reason). Warming
     // d01/d02/d03/d07 pins those one-off costs outside the timed
     // region, so per-query diffs measure the operators.
     // The persisted-index entries (s15–s20) build their store fixture
     // once per (session, sfDir): with a cold fixture the FIRST timed
     // run charges the whole build-grow-compact install to the probe
-    // (ProfileQ r11: s18 15.5 s cold vs 1.9 s warm probe). Warming
+    // (r11: s18 15.5 s cold vs 1.9 s warm probe). Warming
     // them times the recurring operation — the stored-index probe —
     // which is what round-over-round perf diffs should measure.
     Seq("q01_pricing_summary", "e01_csv_ingest", "e02_json_ingest",
@@ -236,7 +227,7 @@ object Bench {
     // alone (8g->16g = -36 s), and that correction lived only in round
     // lore. One short field keeps future runs comparable at a glance.
     val env = s"heap_mb=${Runtime.getRuntime.maxMemory() / (1024L * 1024L)}" +
-      s";cpus=$cpus"
+      s";cpus=${SparkEntry.cpus}"
     // Full precision + full names to a side file for humans/tooling...
     val full = fullLine(results, sharedSec, sfDir, probes, retried.result(),
       env)

@@ -17,4 +17,22 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     Catalog.all.flatMap(q => q.oracle.map(sql => q.name -> sql.stripMargin.trim)).toMap
+
+  /** Worker threads for Bench and Verify: `SPARK_GRAFT_CPUS`, else the
+    * box's cores capped at 32. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+
+  /** The `local[cpus]` session Bench and Verify run the catalog in. */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

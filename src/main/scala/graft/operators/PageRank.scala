@@ -191,10 +191,10 @@ object PageRank {
     } finally releaseED()
   }
 
-  /** Run `body` with AQE off, restoring the session value after —
-    * scoped exactly like the streaming entries' state-partition cap.
-    * Catalog queries run sequentially (Bench/Verify; suites fork one
-    * JVM), so the scoped change is safe. */
+  /** Run `body` with AQE off, restoring the session value after, also
+    * when `body` throws. This writes the caller's session conf: it is
+    * safe only while catalog queries run sequentially (Bench/Verify;
+    * suites fork one JVM), and concurrent callers would race on it. */
   private def withAqeOff[A](sp: org.apache.spark.sql.SparkSession)(
       body: => A): A = {
     val key = "spark.sql.adaptive.enabled"

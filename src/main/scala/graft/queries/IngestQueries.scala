@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.sources.{BucketedWriter, IngestFixtures, Sinks}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 /** Semi-structured ingest entries (SURVEY.md §2 sources): the same
@@ -137,8 +139,32 @@ object IngestQueries {
       ORDER BY o_custkey, valid_from, o_orderkey"""))
 
   private val streamRuns = new java.util.concurrent.atomic.AtomicInteger()
+  private val lastSink =
+    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
 
-  /** Per-run memory-sink name with the PREVIOUS generation dropped: a
+  /** Bounded replay of a streaming frame: `sink` configures the
+    * destination (format, output mode, checkpoint, foreachBatch body),
+    * and the query runs under `Trigger.AvailableNow` until the source
+    * is drained. Every micro-batch opens/commits one state store PER
+    * shuffle partition PER stateful operator (a stream-stream join
+    * keeps four); at local test scale that fixed store overhead — not
+    * data — dominates, so the replay runs with the session's shuffle
+    * partition count at 8, restored after (also when the query fails).
+    * A real deployment sizes it to the state volume instead. Catalog
+    * queries run sequentially (Bench/Verify; test suites run one at a
+    * time in the forked JVM), so the scoped change is safe. */
+  private[graft] def drain(df: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val sp = df.sparkSession
+    val key = "spark.sql.shuffle.partitions"
+    val prev = sp.conf.get(key)
+    sp.conf.set(key, "8")
+    try sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    finally sp.conf.set(key, prev)
+  }
+
+  /** [[drain]] into a memory sink and return the sink's table. A
     * memory sink registers a temp view holding its full output as
     * driver-heap rows, and a unique name per run (required — a sink
     * table is append-frozen once its query terminates) previously left
@@ -146,19 +172,18 @@ object IngestQueries {
     * 298-entry bench/verify session those orphaned sinks compounded
     * into measurable GC pressure on every later entry (r17's
     * one-directional late-alphabet slowdown). Dropping the previous
-    * generation bounds each entry to ONE live sink; the current run's
+    * generation bounds each prefix to ONE live sink; the current run's
     * view must outlive the caller's action, so it is the NEXT run that
     * reclaims it. Keyed per (session, prefix): names are session-scoped
     * temp views. */
-  private val lastSink =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private def freshSink(sp: org.apache.spark.sql.SparkSession,
-      prefix: String): String = {
-    val name = s"${prefix}_${streamRuns.incrementAndGet()}"
-    val key = (System.identityHashCode(sp), prefix)
-    val prev = lastSink.put(key, name)
+  private[graft] def drainToMemory(df: DataFrame, prefix: String,
+      mode: String): DataFrame = {
+    val sp = df.sparkSession
+    val sink = s"${prefix}_${streamRuns.incrementAndGet()}"
+    val prev = lastSink.put((System.identityHashCode(sp), prefix), sink)
     if (prev != null) sp.catalog.dropTempView(prev)
-    name
+    drain(df)(_.format("memory").queryName(sink).outputMode(mode))
+    sp.table(sink)
   }
 
   /** Idempotent bucketed-table build (e07/e25 share these fixtures).
@@ -171,23 +196,6 @@ object IngestQueries {
     IngestFixtures.clearWarehouseDir(sp, table)
     BucketedWriter.writeBucketed(df, table, key, nBuckets = 8,
       sortCol = Some(key))
-  }
-
-  /** Run `body` (which starts and drains a streaming query) with a
-    * reduced shuffle-partition count, restoring the session value
-    * after. Every micro-batch opens/commits one state store PER
-    * shuffle partition PER stateful operator (a stream-stream join
-    * keeps four); at local test scale that fixed store overhead — not
-    * data — dominates, so these short replays cap the state partition
-    * count. A real deployment sizes it to the state volume instead.
-    * Catalog queries run sequentially (Bench/Verify; test suites run
-    * one at a time in the forked JVM), so the scoped change is safe. */
-  private def withFewStatePartitions[A](sp: org.apache.spark.sql.SparkSession,
-      n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = sp.conf.get(key)
-    sp.conf.set(key, n.toString)
-    try body finally sp.conf.set(key, prev)
   }
 
   /** Structured Streaming through the oracle gate: replay the events
@@ -221,15 +229,7 @@ object IngestQueries {
           moneySum(col("value")).as("sum_value"),
           min(col("value")).as("min_value"),
           max(col("value")).as("max_value"))
-      val sink = freshSink(sp, "e05_windows")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(agg, "e05_windows", "complete")
         .select(col("window.start").as("bucket"), col("event_type"),
           col("n_events"), col("sum_value"), col("min_value"), col("max_value"))
         .orderBy("bucket", "event_type")
@@ -258,15 +258,7 @@ object IngestQueries {
           .parquet(s"$dir/events.parque[t]"))
       val deduped = graft.streaming.StreamOps
         .dedupWithinWatermark(src.unionAll(src), "event_id")
-      val sink = freshSink(sp, "e06_dedup")
-      withFewStatePartitions(sp, 8) {
-        val q = deduped.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(deduped, "e06_dedup", "append")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_ids"),
@@ -339,15 +331,7 @@ object IngestQueries {
         .as[graft.streaming.StreamOps.Evt]
       val sessions =
         graft.streaming.StreamOps.sessionize(stream, gapMs = 30L * 60 * 1000)
-      val sink = freshSink(sp, "e08_sessions")
-      withFewStatePartitions(sp, 8) {
-        val q = sessions.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(sessions.toDF(), "e08_sessions", "append")
         .filter(col("start_ms") < unix_millis(far))
         .select(col("user_id"), col("start_ms"), col("end_ms"), col("n_events"))
         .orderBy("user_id", "start_ms")
@@ -495,15 +479,7 @@ object IngestQueries {
       val joined = graft.streaming.StreamOps.attributedPurchases(
         clicks = src.filter(col("event_type") === "click"),
         purchases = src.filter(col("event_type") === "purchase"))
-      val sink = freshSink(sp, "e12_attr")
-      withFewStatePartitions(sp, 8) {
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(joined, "e12_attr", "append")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("purchase_id")).as("n_purchases"),
@@ -817,9 +793,8 @@ object IngestQueries {
             StructField("source", StringType),
             StructField("payload", LongType),
             StructField("version", IntegerType)))
-          val q = sp.readStream.schema(schema).parquet(land)
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          drain(sp.readStream.schema(schema).parquet(land))(_
+            .foreachBatch { (batch: DataFrame, _: Long) =>
               val b = Bridge.truncateBounded(batch)
               Sinks.upsertJdbc(sp, b, url, table,
                 keyCols = Seq("doc_id"), versionCol = "version",
@@ -828,10 +803,7 @@ object IngestQueries {
                 .mode(org.apache.spark.sql.SaveMode.Append)
                 .jdbc(url, audit, new java.util.Properties())
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .option("checkpointLocation", ckpt))
         }
         IngestFixtures.addLandingFile(land,
           docs.filter(col("doc_id") % 2 === 0)
@@ -948,15 +920,7 @@ object IngestQueries {
         .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"),
           moneySum(col("value")).as("sum_value"))
-      val sink = freshSink(sp, "e21_enrich")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(agg, "e21_enrich", "complete")
         .select(col("window.start").as("bucket"), col("c_mktsegment"),
           col("n_events"), col("sum_value"))
         .orderBy("bucket", "c_mktsegment")
@@ -1287,18 +1251,14 @@ object IngestQueries {
             StructField("source", StringType),
             StructField("payload", LongType),
             StructField("version", IntegerType)))
-          val q = sp.readStream.schema(schema).parquet(land)
-            .writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          drain(sp.readStream.schema(schema).parquet(land))(_
+            .foreachBatch { (b: DataFrame, id: Long) =>
               Sinks.upsertBatchExactlyOnce(sp, Bridge.truncateBounded(b), id,
                 url, table, keyCols = Seq("doc_id"), versionCol = "version",
                 numPartitions = 2, partCol = Some("source"))
               ()
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .option("checkpointLocation", ckpt))
         }
         IngestFixtures.addLandingFile(land, batch1,
           "batch1.parquet", 1700000000000L)
@@ -1411,15 +1371,7 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_events"),
           graft.functions.TDigestQuantiles(col("value"),
             Seq(0.5, 0.9, 0.99), 100.0).as("qt"))
-      val sink = freshSink(sp, "e30_quantiles")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(agg, "e30_quantiles", "complete")
         .select(col("event_type"), col("n_events"),
           col("qt")(0).as("p50"), col("qt")(1).as("p90"),
           col("qt")(2).as("p99"))
@@ -1451,15 +1403,7 @@ object IngestQueries {
           graft.functions.TDigestSketch(col("value"), 100.0).as("sketch"),
           graft.functions.TDigestQuantiles(col("value"),
             Seq(0.5), 100.0).as("qt"))
-      val sink = freshSink(sp, "e31_drift")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val windowed = sp.table(sink)
+      val windowed = drainToMemory(agg, "e31_drift", "complete")
         .select(col("window.start").as("bucket"), col("event_type"),
           col("n_events"), col("sketch"), col("qt")(0).as("p50"))
       graft.operators.DigestDrift.report(windowed,
@@ -1559,15 +1503,7 @@ object IngestQueries {
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           graft.functions.HllSketchAgg(col("h"), 6).as("sketch"))
-      val sink = freshSink(sp, "e33_distinct")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(agg, "e33_distinct", "complete")
         .select(col("window.start").as("bucket"), col("event_type"),
           col("n_events"),
           round(graft.functions.HllEstimate(col("sketch")), 4).as("est_users"))
@@ -1642,15 +1578,7 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_events"),
           graft.functions.CmsSketchAgg(col("user_id").cast("long"), 64)
             .as("sketch"))
-      val sink = freshSink(sp, "e34_topk")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val hours = sp.table(sink)
+      val hours = drainToMemory(agg, "e34_topk", "complete")
         .select(col("window.start").as("bucket"), col("n_events"),
           col("sketch"))
         .withColumn("j", pmod(col("n_events"), lit(1L)))
@@ -1748,15 +1676,7 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_events"),
           graft.functions.CmsSketchAgg(col("user_id").cast("long"), 64)
             .as("sketch"))
-      val sink = freshSink(sp, "e35_freqdrift")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val windowed = sp.table(sink)
+      val windowed = drainToMemory(agg, "e35_freqdrift", "complete")
         .select(col("window.start").as("bucket"), col("event_type"),
           col("n_events"), col("sketch"))
       val top = Tables(sp, dir, "events")
@@ -1893,15 +1813,7 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_events"),
           graft.functions.SampleSketchAgg(col("user_id"), col("prio"), 3)
             .as("sk"))
-      val sink = freshSink(sp, "e36_sample")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(agg, "e36_sample", "complete")
         .select(col("window.start").as("bucket"), col("event_type"),
           col("n_events"),
           posexplode(graft.functions.SampleEntries(col("sk")))
@@ -1966,15 +1878,7 @@ object IngestQueries {
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
-      val sink = freshSink(sp, "e37_sessions")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink)
+      drainToMemory(agg, "e37_sessions", "append")
         .filter(col("session_window.start") < far)
         .select(col("user_id"),
           unix_millis(col("session_window.start")).as("start_ms"),
@@ -2090,19 +1994,15 @@ object IngestQueries {
             StructField("op", StringType),
             StructField("seq", LongType),
             StructField("pgrp", IntegerType)))
-          val q = sp.readStream.schema(schema).parquet(land)
-            .writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          drain(sp.readStream.schema(schema).parquet(land))(_
+            .foreachBatch { (b: DataFrame, id: Long) =>
               Sinks.upsertBatchExactlyOnce(sp, Bridge.truncateBounded(b), id,
                 url, table, keyCols = Seq("o_orderkey"), versionCol = "seq",
                 numPartitions = 2, partCol = Some("pgrp"),
                 opCol = Some("op"))
               ()
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .option("checkpointLocation", ckpt))
         }
         IngestFixtures.addLandingFile(land, snapshot,
           "batch1.parquet", 1700000000000L)
@@ -2181,15 +2081,7 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_events"),
           graft.functions.CmsSketchAgg(col("user_id").cast("long"), 64)
             .as("sketch"))
-      val sink = freshSink(sp, "e40_lead")
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val hours = sp.table(sink)
+      val hours = drainToMemory(agg, "e40_lead", "complete")
         .select(col("window.start").as("bucket"), col("n_events"),
           col("sketch"))
         .withColumn("j", pmod(col("n_events"), lit(1L)))
@@ -2300,16 +2192,12 @@ object IngestQueries {
             StructField("o_orderkey", LongType),
             StructField("o_orderstatus", StringType),
             StructField("o_totalprice", DoubleType)))
-          val q = sp.readStream.schema(schema).parquet(land)
-            .writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          drain(sp.readStream.schema(schema).parquet(land))(_
+            .foreachBatch { (b: DataFrame, id: Long) =>
               TxLog.appendBatch(Bridge.truncateBounded(b), id, store)
               ()
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .option("checkpointLocation", ckpt))
         }
         IngestFixtures.addLandingFile(land, batch0,
           "batch0.parquet", 1700000000000L)
@@ -2546,19 +2434,11 @@ object IngestQueries {
           ()
         }
       }
-      val sink = freshSink(sp, "e45_totals")
       val agg = sp.readStream.format("graft.sources.txlog").load(store)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           moneySum(col("o_totalprice")).as("sum_price"))
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink).orderBy("o_orderstatus")
+      drainToMemory(agg, "e45_totals", "complete").orderBy("o_orderstatus")
     },
     Some("""
       SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -2738,21 +2618,13 @@ object IngestQueries {
           orders.filter(pmod(col("o_orderkey"), lit(15L)) === 0L), 2L, store)
         ()
       }
-      val sink = freshSink(sp, "e48_cdf")
       val agg = sp.readStream.format("graft.sources.txlog")
         .option("cdf", "true").load(store)
         .groupBy(col("_commit_version").as("version"),
           col("_change_type").as("change"))
         .agg(count(lit(1)).as("n_rows"),
           sum("o_orderkey").as("key_sum"))
-      withFewStatePartitions(sp, 8) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      sp.table(sink).orderBy("change", "version")
+      drainToMemory(agg, "e48_cdf", "complete").orderBy("change", "version")
     },
     Some("""
       WITH chg AS (
@@ -2803,20 +2675,15 @@ object IngestQueries {
         Seq(store, out).foreach(p => new java.io.File(p).mkdirs())
         val orders = Tables(sp, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        def streamPass(): Unit = withFewStatePartitions(sp, 8) {
-          val q = sp.readStream.format("graft.sources.txlog").load(store)
-            .writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        def streamPass(): Unit =
+          drain(sp.readStream.format("graft.sources.txlog").load(store))(_
+            .foreachBatch { (b: DataFrame, id: Long) =>
               TxLog.appendBatch(
                 Bridge.truncateBounded(b.withColumn("stream_batch", lit(id))),
                 id, out)
               ()
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+            .option("checkpointLocation", ckpt))
         TxLog.appendBatch(                                       // v0
           orders.filter(pmod(col("o_orderkey"), lit(3L)) === 0L), 0L, store)
         TxLog.appendBatch(                                       // v1
@@ -3063,20 +2930,14 @@ object IngestQueries {
           orders.filter(pmod(col("o_orderkey"), lit(4L)) === 2L), 2L, store)
         TxLog.appendBatch(                                       // v4
           orders.filter(pmod(col("o_orderkey"), lit(4L)) === 3L), 3L, store)
-        withFewStatePartitions(sp, 8) {
-          val q = sp.readStream.format("graft.sources.txlog")
-            .option("maxVersionsPerTrigger", 1).load(store)
-            .writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              TxLog.appendBatch(
-                Bridge.truncateBounded(b.withColumn("stream_batch", lit(id))),
-                id, out)
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        drain(sp.readStream.format("graft.sources.txlog")
+            .option("maxVersionsPerTrigger", 1).load(store))(_
+          .foreachBatch { (b: DataFrame, id: Long) =>
+            TxLog.appendBatch(
+              Bridge.truncateBounded(b.withColumn("stream_batch", lit(id))),
+              id, out)
+            ()
+          })
         require(TxLog.versions(out).size == 5,
           s"e53: the capped drain must plan five micro-batches, got " +
             s"${TxLog.versions(out).size}")
@@ -3217,15 +3078,11 @@ object IngestQueries {
         // the CDF stream crosses the delete-carrying span (the plain
         // stream must fail loudly there — spec-proven); one AvailableNow
         // drain lands the tagged change rows in the result table
-        val q = sp.readStream.format(fmt).option("cdf", "true").load(store)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        drain(sp.readStream.format(fmt).option("cdf", "true").load(store))(_
+          .foreachBatch { (b: DataFrame, id: Long) =>
             TxLog.appendBatch(Bridge.truncateBounded(b), id, out)
             ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
       }
       def byStatus(df: org.apache.spark.sql.DataFrame, tag: String) =
         df.groupBy(col("o_orderstatus"))
@@ -3684,19 +3541,15 @@ object IngestQueries {
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         (0L until 3L).foreach(b => TxLog.appendBatch(
           orders.filter(pmod(col("o_orderkey"), lit(3L)) === b), b, store))
-        def drain(ckpt: String): Unit = {
-          val q = sp.readStream.format(fmt)
-            .option("maxVersionsPerTrigger", 1).load(store)
-            .writeStream.format(fmt)
-            .option("checkpointLocation", IngestFixtures.path(ckpt))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start(out)
-          q.awaitTermination()
-        }
-        drain(s"e61_ckpt1_$fp")
+        def sinkPass(ckpt: String): Unit =
+          drain(sp.readStream.format(fmt)
+              .option("maxVersionsPerTrigger", 1).load(store))(_
+            .format(fmt).option("path", out)
+            .option("checkpointLocation", IngestFixtures.path(ckpt)))
+        sinkPass(s"e61_ckpt1_$fp")
         // checkpoint loss: every batch id redelivers; the manifest
         // ledger must recognize them all — no new commits
-        drain(s"e61_ckpt2_$fp")
+        sinkPass(s"e61_ckpt2_$fp")
         require(TxLog.versions(out) == Seq(0, 1, 2),
           s"e61: redelivery must not re-commit, got ${TxLog.versions(out)}")
       }
@@ -5059,23 +4912,18 @@ object IngestQueries {
         // small commits fit together, anything more does not
         val budget = TxLog.versionAddedBytes(store, 1) +
           TxLog.versionAddedBytes(store, 2) + 1
-        def drain(): Unit = withFewStatePartitions(sp, 8) {
-          val q = sp.readStream.format("graft.sources.txlog")
-            .option("maxBytesPerTrigger", budget.toString).load(store)
-            .writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        def streamPass(): Unit =
+          drain(sp.readStream.format("graft.sources.txlog")
+              .option("maxBytesPerTrigger", budget.toString).load(store))(_
+            .foreachBatch { (b: DataFrame, id: Long) =>
               if (!b.isEmpty)
                 TxLog.appendBatch(
                   Bridge.truncateBounded(
                     b.withColumn("stream_batch", lit(id))), id, out)
               ()
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        drain()
+            .option("checkpointLocation", ckpt))
+        streamPass()
         require(TxLog.versions(out).size == 3,
           "e76: LARGE/small+small/LARGE must drain as THREE batches, " +
             s"got ${TxLog.versions(out).size}")
@@ -5083,7 +4931,7 @@ object IngestQueries {
         TxLog.appendBatch(
           orders.filter(pmod(col("o_orderkey"), lit(16L)) === 4L)
             .coalesce(1), 4L, store)                        // v4
-        drain()
+        streamPass()
         require(TxLog.versions(out).size == 4,
           "e76: the resume must drain exactly the new commit, got " +
             s"${TxLog.versions(out).size}")

@@ -287,22 +287,17 @@ object IngestFixtures {
     * rows touch (`partitionOverwriteMode=dynamic`) — untouched
     * partitions must survive byte-identical, which is the whole point
     * of the mode (static overwrite would truncate the table). A marker
-    * file makes the two-step build idempotent across JVMs; the session
-    * conf is scoped and restored. */
+    * file makes the two-step build idempotent across JVMs; the mode is
+    * a per-write option, so the session conf is never touched. */
   def materializeOverwritten(key: String, full: => DataFrame,
       replacement: => DataFrame, partitionCols: Seq[String]): String = {
     val path = this.path(key)
     done.computeIfAbsent(path, _ => {
       if (!new java.io.File(path, "_OVERWRITE_DONE").exists()) {
         Sinks.writePartitionedParquet(full, path, partitionCols)
-        val rep = replacement
-        val sp = rep.sparkSession
-        val confKey = "spark.sql.sources.partitionOverwriteMode"
-        val prev = sp.conf.get(confKey, "static")
-        sp.conf.set(confKey, "dynamic")
-        try rep.write.mode("overwrite")
+        replacement.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionCols: _*).parquet(path)
-        finally sp.conf.set(confKey, prev)
         new java.io.File(path, "_OVERWRITE_DONE").createNewFile()
       }
       path

@@ -195,10 +195,9 @@ class DefaultSource extends RelationProvider
       .getOrElse(Seq.empty)
 
   /** Dynamic partition overwrite opt-in: the writer/table option
-    * wins; else Spark's own session conf (the knob e22's plain-parquet
-    * flow already uses), so `INSERT OVERWRITE` under
+    * wins; else Spark's own session conf, so `INSERT OVERWRITE` under
     * `spark.sql.sources.partitionOverwriteMode=dynamic` behaves the
-    * same against this format. */
+    * same against this format as against plain parquet. */
   private[txlog] def dynamicOverwriteOf(sqlContext: SQLContext,
       parameters: Map[String, String]): Boolean =
     parameters.get("partitionOverwriteMode")

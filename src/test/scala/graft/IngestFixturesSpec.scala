@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.IngestFixtures
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{concat, lit}
 
 /** Fixture-root hygiene: [[IngestFixtures.path]] registers every
   * fixture directory this JVM touches, and [[IngestFixtures.gcStale]]
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture root across rounds. Tested against a scratch root: the
   * real root is live state shared with the other suites in this JVM.
   */
-class IngestFixturesSpec extends AnyFunSuite {
+class IngestFixturesSpec extends SparkSpec {
 
   test("gcStale sweeps untracked dirs and keeps tracked ones") {
     val root = java.nio.file.Files
@@ -38,5 +38,30 @@ class IngestFixturesSpec extends AnyFunSuite {
   test("path() registers under the fixture root") {
     val p = IngestFixtures.path("spec_probe_key")
     assert(p == s"${IngestFixtures.Root}/spec_probe_key")
+  }
+
+  test("materializeOverwritten (e22) keeps untouched partitions and " +
+      "leaves the session conf alone") {
+    val s = spark.newSession()
+    import s.implicits._
+    val confKey = "spark.sql.sources.partitionOverwriteMode"
+    def conf = (s.conf.get(confKey), s.conf.getAll.get(confKey))
+    val before = conf
+    val docs = (1L to 12L).map(i =>
+      (i, s"text $i", Seq("en", "de", "fr")((i % 3).toInt))).toDF(
+      "doc_id", "text", "lang")
+    val replacement = docs.filter($"lang" === "en" && $"doc_id" % 2 === 0)
+      .withColumn("text", concat($"text", lit(" v2")))
+    val path = IngestFixtures.materializeOverwritten(
+      s"spec_overwrite_${System.nanoTime()}", docs, replacement, Seq("lang"))
+    try {
+      assert(conf === before)
+      val got = s.read.parquet(path).select("doc_id", "text", "lang")
+      val want = docs.filter($"lang" =!= "en").unionByName(replacement)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
+      ()
+    }
   }
 }
