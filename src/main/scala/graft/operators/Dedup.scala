@@ -51,18 +51,6 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"),
       explode(graft.functions.ShingleHashes(col(textCol), n)).as("shingle"))
 
-  /** Exact n-gram Jaccard similarity for candidate pairs that share at
-    * least one shingle. The shingle join is the only shuffle; the
-    * all-pairs blowup is bounded by shingle document frequency (word
-    * n-grams are discriminative; for adversarial corpora add a df cap
-    * before the self-join). */
-  /** @param maxDf optional document-frequency cap: shingles appearing
-    *   in more than `maxDf` docs are dropped BEFORE pair generation.
-    *   This bounds bucket fanout on adversarial/boilerplate-heavy
-    *   corpora (sum of df² drives the pair count) at the cost of
-    *   computing Jaccard over discriminative shingles only — the
-    *   standard stop-shingle trade-off. Any oracle must mirror the cap.
-    */
   /** The df-annotated (doc_id, shingle, df) table — ONE pinned copy
     * per (docs, n) corpus via [[DfCache]], shared by every df-capped
     * dedup path ([[ngramJaccard]]'s bucket chain and
@@ -77,6 +65,19 @@ object Dedup {
         .withColumn("df", count(lit(1)).over(w))
     }
 
+  /** Exact n-gram Jaccard similarity for candidate pairs that share at
+    * least one shingle. The shingle join is the only shuffle; the
+    * all-pairs blowup is bounded by shingle document frequency (word
+    * n-grams are discriminative; for adversarial corpora add a df cap
+    * before the self-join).
+    *
+    * @param maxDf optional document-frequency cap: shingles appearing
+    *   in more than `maxDf` docs are dropped BEFORE pair generation.
+    *   This bounds bucket fanout on adversarial/boilerplate-heavy
+    *   corpora (sum of df² drives the pair count) at the cost of
+    *   computing Jaccard over discriminative shingles only — the
+    *   standard stop-shingle trade-off. Any oracle must mirror the cap.
+    */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
       n: Int, minJaccard: Double, maxDf: Option[Int] = None): DataFrame = {
     // The shingle set feeds the size aggregate AND the bucket build.
@@ -128,13 +129,12 @@ object Dedup {
       graft.functions.MinHashSigExpr(
         graft.functions.ShingleHashes(col(textCol), shingleN), k).as("sig"))
 
-  /** LSH banding: explode each signature into (band, bandSig) bucket
-    * keys; docs sharing any band bucket are near-dup candidates.
-    * Candidate generation is a self-join on the compact bucket key —
-    * the standard scale path (shuffle ∝ corpus size, not pairs). */
-  /** The (doc_id, band, band_sig) bucket assignment behind
-    * [[minhashCandidates]] — also the input to index-tuning reports
-    * (bucket-size distributions predict candidate volume).
+  /** LSH banding: explode each signature into (doc_id, band, band_sig)
+    * bucket keys; docs sharing any band bucket are near-dup candidates
+    * ([[minhashCandidates]] self-joins on the compact bucket key — the
+    * standard scale path, shuffle ∝ corpus size, not pairs). Also the
+    * input to index-tuning reports (bucket-size distributions predict
+    * candidate volume).
     *
     * concat (NOT concat_ws): a doc with no shingles has an all-null
     * signature, and null must propagate into the bucket key so such
@@ -324,18 +324,33 @@ object Dedup {
     * cluster simhashes HARD — one 16-bit band bucket can collect a
     * large doc fraction — so the self-join takes the same salting
     * hooks as [[minhashCandidates]] (measured at sf0.1: the hottest
-    * band bucket held 1109 of 5000 docs = 614k pairs on one task). */
+    * band bucket held 1109 of 5000 docs = 614k pairs on one task).
+    *
+    * First-shared-band ownership: a pair sharing several bands meets
+    * in each of their buckets, but only its LOWEST shared band emits
+    * it — the pair row carries both fingerprints, so "every lower
+    * band's key differs" is a per-row test on the bucket-key
+    * expression. With one row per doc_id in `fps`, each pair is then
+    * emitted exactly once on the plain and the salted path, and no
+    * pair-volume `distinct` runs: the output is the distinct
+    * (d1, d2, hamming) set, d1 < d2. */
   def simhashCandidates(fps: DataFrame, maxHamming: Int,
       salt: Int = 1, saltMinBucket: Int = Int.MaxValue): DataFrame = {
+    def bandKey(simhash: Column, b: Int): Column =
+      call_function("shiftright", simhash, lit(b * 16)) % lit(65536L)
     val banded = fps.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(b =>
-        call_function("shiftright", col("simhash"), lit(b * 16)) % lit(65536L)): _*))
+      posexplode(array((0 until 4).map(bandKey(col("simhash"), _)): _*))
         .as(Seq("band", "band_val")))
+    val owned = (0 until 3).map(j =>
+      col("band") <= j || bandKey(col("s1"), j) =!= bandKey(col("s2"), j))
+      .reduce(_ && _)
     bucketPairs(banded, Seq("band", "band_val"), salt, saltMinBucket)(
       Seq(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        HashFunctions.hamming(col("a.simhash"), col("b.simhash")).as("hamming")))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+        HashFunctions.hamming(col("a.simhash"), col("b.simhash")).as("hamming"),
+        col("a.band").as("band"),
+        col("a.simhash").as("s1"), col("b.simhash").as("s2")))
+      .filter(owned && col("hamming") <= maxHamming)
+      .select("d1", "d2", "hamming")
   }
 
   /** Embedding near-dup pairs above a cosine threshold. Candidates

@@ -183,18 +183,18 @@ object ExactPercentiles {
     // references them through located/needed/boundary/wide so many
     // times that each reference re-expanded into its own full base
     // scan + aggregation (q76's composed plan reached 84 parquet scans
-    // / 110 exchanges before this). truncateBounded pins each to ONE
-    // scan + aggregation; the deliberate re-scan posture (see [[mad]]'s
-    // measured note) applies to the CORPUS-sized base, which stays
-    // uncached — pass 2 still re-scans storage.
-    val counts = base.groupBy("g").agg(count(lit(1)).as("n"))
-      .transform(Bridge.truncateBounded)
-    // bounded frame: value-range/bucketWidth buckets per group
+    // / 110 exchanges before this). truncateBounded pins hist (value-
+    // range/bucketWidth buckets per group) to ONE scan + aggregation,
+    // and counts re-aggregates the pinned buckets; the deliberate
+    // re-scan posture (see [[mad]]'s measured note) applies to the
+    // CORPUS-sized base, which stays uncached — pass 2 still re-scans
+    // storage.
     val hist = base.groupBy("g", "b").agg(count(lit(1)).as("c"))
       .withColumn("cum_before", coalesce(
         sum(col("c")).over(Window.partitionBy("g").orderBy("b")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .transform(Bridge.truncateBounded)
+    val counts = hist.groupBy("g").agg(sum(col("c")).as("n"))
     // per (group, quantile): the two boundary ranks and the fraction
     val targets = counts.select(col("g"), col("n"),
       explode(array(qs.map { case (label, q) =>

@@ -182,8 +182,10 @@ object DedupQueries {
       // sf0.1) — the chunk-salt spreads that bucket's pair volume
       val cands = Dedup.simhashCandidates(fps, maxHamming = 12,
         salt = 8, saltMinBucket = 64)
-      val partners = cands.select(col("d1").as("doc_id"))
-        .unionAll(cands.select(col("d2").as("doc_id")))
+      // one reference to cands: with no distinct exchange on top to
+      // reuse, a union of its d1 and d2 projections would run the band
+      // join twice
+      val partners = cands.select(explode(array(col("d1"), col("d2"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_candidates"))
       fps.join(partners, Seq("doc_id"), "left_outer")
         .select(col("doc_id"), col("simhash"),
@@ -830,28 +832,32 @@ object DedupQueries {
     * dedup stack: raw corpus → exact-distinct (d01's dual 62-bit
     * hash groups) → near-dup clusters (d06's canonical components),
     * each stage with its retained share. This is the number a
-    * pipeline owner quotes ("dedup kept 94%"); both downstream stages
-    * reuse the session-cached builds, so the funnel costs one tiny
-    * re-aggregation, not a recompute. */
+    * pipeline owner quotes ("dedup kept 94%"). The raw and exact
+    * stages come from ONE pass over d01's hash groups (Σ n_copies is
+    * the raw count, the group count the exact one), and the near-dup
+    * stage reuses the session-cached components build, so the funnel
+    * scans `documents` once and costs one tiny re-aggregation, not a
+    * recompute. */
   val d18 = QueryDef(
     "d18_dedup_funnel",
     (sp, dir) => {
-      val docs = Tables(sp, dir, "documents")
-      val raw = docs.agg(count(lit(1)).as("n"))
-        .select(lit("1_raw").as("stage"), col("n"))
-      val exact = Dedup.exact(docs, "doc_id", "text")
-        .agg(count(lit(1)).as("n"))
-        .select(lit("2_after_exact").as("stage"), col("n"))
+      val counts = Dedup.exact(Tables(sp, dir, "documents"), "doc_id", "text")
+        .agg(coalesce(sum(col("n_copies")), lit(0L)).as("raw"),
+          count(lit(1)).as("exact"))
       val near = canonicalDocs(sp, dir)
-        .agg(countDistinct(col("canonical_id")).as("n"))
-        .select(lit("3_after_near_dup").as("stage"), col("n"))
-      val total = docs.agg(count(lit(1)).as("t"))
-        .withColumn("__j", pmod(col("t"), lit(1L)))
-      raw.unionByName(exact).unionByName(near)
-        .withColumn("__j", pmod(col("n"), lit(1L)))
-        .join(broadcast(total), "__j").drop("__j")
-        .select(col("stage"), col("n"),
-          (col("n").cast("double") / col("t").cast("double"))
+        .agg(countDistinct(col("canonical_id")).as("near"))
+      // one row each: the constant NON-FOLDABLE key keeps the stitch a
+      // broadcast hash join rather than a nested-loop cross join
+      counts.withColumn("__j", pmod(col("raw"), lit(1L)))
+        .join(broadcast(near.withColumn("__j", pmod(col("near"), lit(1L)))),
+          "__j")
+        .select(col("raw"), explode(array(
+          struct(lit("1_raw").as("stage"), col("raw").as("n")),
+          struct(lit("2_after_exact").as("stage"), col("exact").as("n")),
+          struct(lit("3_after_near_dup").as("stage"), col("near").as("n"))))
+          .as("s"))
+        .select(col("s.stage").as("stage"), col("s.n").as("n"),
+          (col("s.n").cast("double") / col("raw").cast("double"))
             .as("retained_share"))
         .orderBy("stage")
     },

@@ -552,27 +552,28 @@ object PipelineQueries {
     * guarantees Σquota = budget EXACTLY (spec-asserted), which
     * proportional rates (p01) can't. All integer arithmetic — the
     * remainders compare as scaled integers `(100·n) mod total`, never
-    * doubles. The windows run over one row per language — bounded by
-    * group cardinality, not data volume. */
+    * doubles. After the per-language counts, ONE global aggregate
+    * collects those rows (bounded by group cardinality, not data
+    * volume) and array functions do the rest — no Window, so no
+    * chain of single-partition window stages over a handful of rows. */
   val p16 = QueryDef(
     "p16_quota_sample",
     (sp, dir) => {
-      // these windows run over the per-lang counts frame only
-      // (dimension-sized); the constant NON-FOLDABLE partition key is
-      // the q58/p10 convention — declares the single bounded partition
-      // so WindowExec's "No Partition Defined" warning never fires
-      val everything = Window.partitionBy(pmod(col("n_docs"), lit(1L)))
       val counts = Tables(sp, dir, "documents")
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .withColumn("total", sum(col("n_docs")).over(everything))
-        .withColumn("base", expr("(100 * n_docs) div total"))
-        .withColumn("rem", (lit(100) * col("n_docs")) % col("total"))
       counts
-        .withColumn("rk", row_number().over(
-          everything.orderBy(col("rem").desc, col("lang"))))
-        .withColumn("leftover", lit(100) - sum(col("base")).over(everything))
-        .select(col("lang"), col("n_docs"),
-          (col("base") + when(col("rk") <= col("leftover"), 1L)
+        .agg(sum(col("n_docs")).as("total"),
+          collect_list(struct(col("lang"), col("n_docs"))).as("c"))
+        // (-rem, lang) sorts as (rem desc, lang): position = rank - 1
+        .select(sort_array(expr("""transform(c, x -> named_struct(
+          'neg_rem', -((100 * x.n_docs) % total), 'lang', x.lang,
+          'n_docs', x.n_docs, 'base', (100 * x.n_docs) div total))"""))
+          .as("r"))
+        .select((lit(100L) - aggregate(col("r"), lit(0L),
+            (acc, x) => acc + x("base"))).as("leftover"),
+          posexplode(col("r")).as(Seq("i", "x")))
+        .select(col("x.lang").as("lang"), col("x.n_docs").as("n_docs"),
+          (col("x.base") + when(col("i") < col("leftover"), 1L)
             .otherwise(0L)).as("quota"))
         .orderBy("lang")
     },

@@ -83,6 +83,60 @@ class DedupSkewSpec extends SparkSpec {
     assert(plain.size >= 200 * 199 / 2, "hot-bucket pairs present")
   }
 
+  test("simhash candidates emit each pair once whether it shares 1, 2, 3 or 4 bands") {
+    // 80 docs on one (negative) fingerprint make every band bucket hot;
+    // for each non-empty subset of bands, 6 docs keep exactly those
+    // bands of it and randomize the others — so pairs sharing 1, 2, 3
+    // and all 4 bands, in every band position, meet in several buckets
+    val rnd = new scala.util.Random(23)
+    val f0 = 0x9e3779b97f4a7c15L
+    def keep(mask: Int): Long = {
+      var fp = rnd.nextLong()
+      for (b <- 0 until 4 if (mask & (1 << b)) != 0) {
+        val m = 0xffffL << (16 * b)
+        fp = (fp & ~m) | (f0 & m)
+      }
+      fp
+    }
+    val fpRows = Seq.fill(80)(f0) ++
+      (1 until 16).flatMap(mask => Seq.fill(6)(keep(mask)))
+    val fps = fpRows.zipWithIndex.map { case (fp, i) => (i.toLong, fp) }
+      .toDF("doc_id", "simhash")
+    // reference: every (pair, band) the bucket join emits, then distinct
+    val banded = fps.select(col("doc_id"), col("simhash"),
+      posexplode(array((0 until 4).map(b =>
+        call_function("shiftright", col("simhash"), lit(b * 16)) % lit(65536L)): _*))
+        .as(Seq("band", "band_val")))
+    def reference(maxHamming: Int) = banded.as("a")
+      .join(banded.as("b"), col("a.band") === col("b.band") &&
+        col("a.band_val") === col("b.band_val") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        graft.functions.HashFunctions.hamming(col("a.simhash"), col("b.simhash"))
+          .as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
+    val byId = fpRows.zipWithIndex.map { case (fp, i) => i.toLong -> fp }.toMap
+    // the operator's bucket key, in Scala's matching signed semantics
+    def key(fp: Long, b: Int) = (fp >> (16 * b)) % 65536L
+    def shared(d1: Long, d2: Long) =
+      (0 until 4).count(b => key(byId(d1), b) == key(byId(d2), b))
+    for (maxHamming <- Seq(64, 20)) {
+      val want = rows(reference(maxHamming))
+      if (maxHamming == 64)
+        assert(want.map { case (a, b, _) => shared(a, b) }.toSet === Set(1, 2, 3, 4),
+          "the fixture must hold pairs sharing each band count")
+      for ((s, min) <- Seq((1, Int.MaxValue), (salt, 64))) {
+        val got = rows(Dedup.simhashCandidates(fps, maxHamming, s, min))
+        assert(got.distinct.size === got.size,
+          s"salt=$s maxHamming=$maxHamming: a pair was emitted more than once")
+        assert(got === want, s"salt=$s maxHamming=$maxHamming")
+      }
+    }
+  }
+
   test("verified pairs with salting engaged match the unsalted two-phase result") {
     val docs = (0L until 120L).map { i =>
       val text =

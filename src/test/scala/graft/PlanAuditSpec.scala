@@ -214,6 +214,38 @@ class PlanAuditSpec extends SparkSpec {
       s"the one-pass claim requires a single lineitem scan:\n${p.take(2000)}")
   }
 
+  test("d03 simhash candidates run no aggregate keyed on the pairs") {
+    val pairKeyedAgg = "\\w*Aggregate\\(keys=\\[d1#\\d+L?, d2#".r
+    // detector control: a plain distinct over (d1, d2) is caught
+    val control = spark.range(3).select(col("id").as("d1"), col("id").as("d2"))
+      .distinct().queryExecution.executedPlan.toString
+    assert(pairKeyedAgg.findFirstIn(control).nonEmpty, control)
+    val p = plan("d03_simhash")
+    assert(pairKeyedAgg.findFirstIn(p).isEmpty,
+      s"first-band ownership must replace the pair distinct:\n${p.take(3000)}")
+  }
+
+  test("p16 quota allocation plans no Window") {
+    val p = plan("p16_quota_sample")
+    assert(!p.contains("Window"),
+      s"the counts frame needs one aggregate, not windows:\n${p.take(2000)}")
+  }
+
+  test("d18 dedup funnel reads documents exactly once") {
+    // tree walk, not plan text: the near-dup stage reads the session's
+    // cached components build, whose printed InMemoryRelation shows a
+    // documents scan that d18 itself never runs
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val p = Catalog.byName("d18_dedup_funnel").build(spark, dir)
+      .queryExecution.sparkPlan
+    val scans = p.collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "documents.parquet") => s
+    }
+    assert(scans.size == 1,
+      s"raw and exact counts must share one documents scan:\n${p.toString.take(3000)}")
+  }
+
   test("s08 PQ argmin partially aggregates before its exchange") {
     val p = plan("s08_pq_encode")
     assert(p.contains("partial_min(struct("),
