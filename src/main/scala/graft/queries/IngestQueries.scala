@@ -1150,21 +1150,20 @@ object IngestQueries {
           AS BIGINT) AS n_backslashes
       FROM t GROUP BY lang ORDER BY lang"""))
 
-  /** Partition-scoped ATOMIC upsert — the production terminal hop
-    * fixed to be both crash-safe and O(delta) ([[Sinks.upsertJdbc]]
-    * with `partCol`): the live table is never truncated (merged rows
-    * stage into `__stage`, installed by a single transaction), and an
-    * incremental installment deletes+reinserts ONLY the partitions it
-    * touches — here installment 2 carries src0/src1 rows, so the other
-    * 18 source partitions are never read, never deleted, never
-    * rewritten (the existing-side read pushes `source IN (...)` down
-    * to the database). SinksAtomicSpec proves the two failure claims
-    * directly: a stage write killed mid-flight leaves the old table
-    * byte-identical, and a canary row in an untouched partition
-    * survives a delta install that would have lost it had the DELETE
-    * been table-wide. Update-beats-insert per key as everywhere
-    * (multiples of 6 exercise updates, odd multiples of 3 in src0/src1
-    * inserts). */
+  /** Key-scoped ATOMIC upsert — the production terminal hop, crash-
+    * safe and O(batch) ([[Sinks.upsertJdbc]]): the live table is never
+    * truncated and never read back. Each installment stages only its
+    * per-key winners in `__stage`, and one transaction deletes the
+    * live rows whose keys the stage holds and inserts the stage — here
+    * installment 2 carries src0/src1 rows, so no row of the other 18
+    * sources, nor any src0/src1 row outside the batch's keys, is read,
+    * deleted or rewritten. `partCol = source` is passed as a producer
+    * would; in upsert mode it scopes nothing. SinksAtomicSpec proves
+    * the two failure claims directly: a stage write killed mid-flight
+    * leaves the old table byte-identical, and a canary row outside the
+    * batch survives the install. Update-beats-insert per key as
+    * everywhere (multiples of 6 exercise updates, odd multiples of 3
+    * in src0/src1 inserts). */
   val e27 = QueryDef(
     "e27_partitioned_upsert",
     (sp, dir) => {
@@ -1182,8 +1181,8 @@ object IngestQueries {
               lit(1).as("version")),
           url, table, keyCols = Seq("doc_id"), versionCol = "version",
           numPartitions = 2, partCol = Some("source"))
-        // installment 2: version-2 rows for src0/src1 ONLY — the delta
-        // install merges against just those two partitions
+        // installment 2: version-2 rows for src0/src1 ONLY — the key-
+        // scoped install replaces just those keys
         Sinks.upsertJdbc(sp,
           docs.filter(col("doc_id") % 3 === 0 &&
               col("source").isin("src0", "src1"))
@@ -1956,10 +1955,10 @@ object IngestQueries {
     * (returned lines become deletes). After the stream, batch 1 — the
     * one with deletes — is deliberately REDELIVERED and must be
     * skipped: n_batches = 2 rides in the result, so a double-apply
-    * (or a delete resurrected by the touched-partition refill) breaks
-    * the oracle hash. The merge runs the partition-scoped delta path
-    * (partCol = key-range bucket), proving deletes compose with
-    * O(touched-partitions) installs. The oracle replays e13's CDC
+    * (or a resurrected delete) breaks the oracle hash. `partCol` (a
+    * key-range bucket) scopes the stored-version read to the batch's
+    * buckets, and the key-scoped install deletes every surviving key
+    * and inserts only the 'U' winners. The oracle replays e13's CDC
     * fold in SQL over the original parquet. */
   val e39 = QueryDef(
     "e39_stream_cdc",

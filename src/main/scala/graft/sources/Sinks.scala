@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Sources and sinks beyond parquet (SURVEY.md §2 sources/sinks).
   *
@@ -49,45 +49,62 @@ object Sinks {
     spark.read.jdbc(url, table, props)
 
   /** Upsert into a JDBC table without engine MERGE support (SQLite-
-    * class targets): union the incoming batch with the current rows,
-    * keep the winner per key (incoming beats existing; ties within the
-    * batch break on the version column, then deterministically on the
-    * remaining columns). The read-modify-write is the portable JDBC
-    * merge; at warehouse scale swap the terminal hop for the engine's
-    * native MERGE and keep the same dedup plan.
+    * class targets). The winner per key is picked by a window over the
+    * batch alone (version desc, then the remaining columns desc, a
+    * deterministic tie-break), and a winner replaces the stored rows
+    * of its key. At warehouse scale swap the terminal hop for the
+    * engine's native MERGE and keep the same dedup plan.
     *
-    * ATOMICITY: the live table is NEVER truncated. The merged result
-    * is written to a scratch stage table (`table__stage`), and only
-    * then installed — first load via ONE transactional rename, an
-    * existing table via a rename pair inside one transaction (full
-    * path) or a DELETE+INSERT inside one transaction (delta path). A
-    * crash anywhere before the final commit leaves the previous table
+    * KEY-SCOPED INSTALL: only the winners (at most the batch's size)
+    * are written, to a scratch stage table (`table__stage`). A first
+    * load installs the stage by ONE transactional rename. Once the
+    * table exists, the stage gets an index on its key columns and ONE
+    * transaction deletes the live rows whose key appears in the stage
+    * (an `EXISTS` probe into that index), inserts the stage's rows and
+    * runs `txnHook`. Upsert mode never reads the live table back, so
+    * an installment costs O(batch), not O(table). The live table is
+    * never truncated: a crash anywhere before the commit leaves it
     * byte-identical (SinksAtomicSpec kills the stage write mid-flight
-    * and proves survival); a crash after it leaves the new state.
-    * Leftover `__stage`/`__old` scratch from a crashed run is swept on
-    * the next call.
+    * and proves survival), a crash after it leaves the new state, and
+    * a stage left by a crashed run is swept on the next call.
     *
-    * O(DELTA): pass `partCol` (a column whose values cluster each
-    * batch — a date, a source, a key-range bucket) and the merge is
-    * scoped to the TOUCHED partitions only: the existing-side read
-    * pushes `partCol IN (touched)` down to the database, the stage
-    * holds only touched-partition rows, and the install transaction
-    * deletes+reinserts exactly those partitions — the e22 dynamic-
-    * partition-overwrite contract, composed with the upsert. Without
-    * `partCol` every installment rewrites the whole table (still
-    * atomically), which at 100 TB makes the terminal hop O(table) per
-    * batch — fine for dimension-sized tables, wrong for fact sinks. */
-  /** CDC extension: pass `opCol` (a batch column holding 'U' upsert /
-    * 'D' delete) and the merge becomes MERGE-INTO with deletes — the
-    * key's winning change row is picked by the same window (version
-    * desc, then op desc so a tie resolves U-before-D deterministically,
-    * then the remaining columns), a winning 'U' upserts, a winning 'D'
-    * removes the key from the table. The op column itself is never
-    * stored: existing rows participate in the window as implicit 'U's.
-    * Delete scoping composes with `partCol`: a change row carries its
-    * key's (stable) partition value, so the touched-partition
-    * delete+refill drops deleted keys without scanning untouched
-    * partitions. */
+    * CDC: pass `opCol` (a batch column holding 'U' upsert / 'D'
+    * delete) and the merge becomes MERGE-INTO with deletes. The window
+    * breaks version ties on the op desc (U before D), then the other
+    * columns. Here the VERSION wins, not the batch: a late or
+    * redelivered change with a STALE version must never beat newer
+    * stored state (a stale 'D' would delete a newer row). So the key
+    * and version columns of the live table are read, winners whose
+    * stored version is newer are dropped in Spark (same-version ties
+    * go to the batch), and the survivors are staged with their op. The
+    * install deletes every surviving key and inserts only the 'U'
+    * rows, so a winning 'D' removes its key. The op column is never
+    * stored.
+    *
+    * `partCol` (a column whose values cluster each batch: a date, a
+    * source, a key-range bucket) scopes the CDC stored-version read:
+    * `partCol IN (touched)` is pushed down to the database. It must be
+    * STABLE per key, or the read misses the stored version of a key
+    * that moved partitions and a stale change could win. A batch with
+    * a NULL partition value (which never matches the IN filter) or
+    * with more than 10,000 distinct ones is refused. In upsert mode,
+    * which reads nothing back, `partCol` is accepted and has no
+    * effect.
+    *
+    * Edges:
+    *  - a NULL key is a key: a batch row with a NULL key replaces the
+    *    stored NULL-key row;
+    *  - duplicate keys already in the live table are collapsed only
+    *    for the batch's keys (all their rows are replaced); other
+    *    duplicates stay;
+    *  - a batch whose columns (less `opCol`) differ from the live
+    *    table's is refused before any write;
+    *  - a string key is matched through a VARCHAR(1024) copy staged
+    *    beside it, because Derby-class engines can neither compare nor
+    *    index a CLOB (on Derby the live side is compared through a
+    *    cast). Once the table exists, a batch key longer than 1,024
+    *    characters fails the stage write, before the install; a longer
+    *    stored key is never matched. */
   def upsertJdbc(spark: SparkSession, batch: DataFrame, url: String,
       table: String, keyCols: Seq[String], versionCol: String,
       numPartitions: Int = 8, props: Properties = new Properties(),
@@ -96,10 +113,6 @@ object Sinks {
       txnHook: java.sql.Connection => Unit = _ => ()): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // NOTE: a partition column outside the key must be STABLE per key
-    // (a key that moves partitions would leave its old row behind in a
-    // partition the batch didn't touch) — contract on the caller, like
-    // e22's partition column.
     require(partCol.forall(batch.columns.contains),
       s"partCol $partCol must be a batch column")
     require(opCol.forall(batch.columns.contains),
@@ -107,143 +120,145 @@ object Sinks {
     require(opCol.forall(c => !keyCols.contains(c) && c != versionCol &&
       !partCol.contains(c)), s"opCol $opCol must be a dedicated column")
     val stage = table + "__stage"
-    val old = table + "__old"
     // sweep scratch from a previous crashed run BEFORE deciding paths
     dropIfExists(url, stage, props)
-    dropIfExists(url, old, props)
     // existence is decided by catalog metadata, not by whether a read
     // throws: a transient read failure must surface as an error, never
     // silently downgrade the merge to a table-clobbering first load
     val tableExists = jdbcTableExists(url, table, props)
-    val touched: Option[Seq[Any]] = partCol.filter(_ => tableExists).map { p =>
-      // distinct partition values in the batch: small by the partCol
-      // contract (a batch clusters in few partitions), so the collect
-      // is bounded — this is partition METADATA, not data. The cap
-      // makes a broken contract fail LOUDLY at the driver instead of
-      // oom-ing it or ballooning the install transaction: a batch
-      // touching >10k partitions means partCol is not a partition
-      // column for this workload — use the full path.
-      val vals = batch.select(col(p)).distinct().limit(10001)
-        .collect().map(_.get(0)).toSeq
-      require(vals.size <= 10000,
-        s"batch touches >10000 distinct '$p' partitions — partCol is " +
-          "not clustering this workload; drop partCol for the full path")
-      // NULL partition values would silently corrupt the merge: both
-      // the pushed `IN` filter and the scoped DELETE evaluate to NULL
-      // (never true) for a NULL partition, so existing NULL-partition
-      // rows are neither read into the merge nor deleted while the
-      // stage still inserts the batch's NULL rows — duplicate keys
-      // accumulate. Fail loudly, like the partition-count cap.
-      require(!vals.contains(null),
-        s"batch contains NULL '$p' partition values — NULL never " +
-          "matches the pushed IN filter or the partition-scoped " +
-          "DELETE, so the merge would silently duplicate keys; map " +
-          "NULL to a sentinel value or drop partCol for the full path")
-      vals
-    }
-    val existing =
-      if (!tableExists) None
-      else Some {
-        val full = readJdbc(spark, url, table, props)
-        // the IN filter is pushed down to the database scan (JDBC
-        // filter pushdown), so the delta path reads only touched
-        // partitions — O(batch + matching partitions), not O(table)
-        touched.zip(partCol) match {
-          case Some((vals, p)) => full.filter(col(p).isin(vals: _*))
-          case None => full
-        }
+    val dataCols = batch.columns.filterNot(opCol.contains).toSeq
+    // live column name per lower-cased batch column (schema only: the
+    // JDBC relation resolves its schema without running a job)
+    val liveCol: Map[String, String] =
+      if (!tableExists) Map.empty
+      else {
+        val live = readJdbc(spark, url, table, props).columns.toSeq
+        require(live.map(_.toLowerCase).sorted ==
+          dataCols.map(_.toLowerCase).sorted,
+          s"batch columns ${dataCols.mkString(", ")} do not match " +
+            s"table $table columns ${live.mkString(", ")}")
+        live.map(c => c.toLowerCase -> c).toMap
       }
-    // the batch itself dedups through the same window whether or not
-    // the table exists — duplicate keys within a first-load batch must
-    // not survive either. With opCol, existing rows are implicit 'U's
-    // (the table never stores the op column).
-    val tagged = existing.foldLeft(batch.withColumn("__new", lit(1))) {
-      (b, cur) => b.unionByName(opCol.foldLeft(cur.withColumn("__new", lit(0))) {
-        (c, op) => c.withColumn(op, lit("U"))
-      })
-    }
-    val others = batch.columns.filterNot(keyCols.contains)
-      .filterNot(_ == versionCol).filterNot(opCol.contains).map(col).toSeq
-    // tie-break order differs by mode. Upsert (no opCol): batch-wins —
-    // `__new` before version is the documented "a batch row replaces
-    // the stored row" contract. CDC (opCol): VERSION-wins — a late or
-    // redelivered change row with a STALE version must never beat the
-    // newer stored state (a stale 'D' would otherwise DELETE a newer
-    // row — destructive, unlike the upsert path's mere rewrite);
-    // same-version ties still resolve to the batch row via `__new`.
+    val others = dataCols.filterNot(keyCols.contains)
+      .filterNot(_ == versionCol).map(col)
     val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy((if (opCol.isDefined)
-          Seq(col(versionCol).desc, col("__new").desc)
-        else Seq(col("__new").desc, col(versionCol).desc)) ++
-        (opCol.map(c => col(c).desc).toSeq ++ others.map(_.desc)): _*)
-    val merged0 = tagged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__new", "__rn")
-    // a key whose winning change is a delete leaves the table: it is
-    // absent from the staged result, and the install path (full
-    // rewrite, rename pair, or touched-partition delete+refill) makes
-    // that absence the new truth
-    val merged = opCol.foldLeft(merged0) { (m, op) =>
-      m.filter(col(op) === "U").drop(op)
+      .orderBy((col(versionCol).desc +: (opCol.map(c => col(c).desc).toSeq ++
+        others.map(_.desc))): _*)
+    val winners = batch.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+    val survivors = opCol match {
+      case None => winners
+      // first load: a winning 'D' has nothing to remove
+      case Some(op) if !tableExists =>
+        winners.filter(col(op) === "U").drop(op)
+      case Some(op) =>
+        // stored versions, scoped to the batch's partitions by partCol
+        val live = readJdbc(spark, url, table, props)
+        val scoped = partCol.fold(live) { p =>
+          live.filter(col(p).isin(touchedPartitions(batch, p): _*))
+        }
+        val stored = scoped.select((keyCols :+ versionCol).map(c =>
+          col(c).as("__s_" + c)): _*)
+        val (v, sv) = (col(versionCol), col("__s_" + versionCol))
+        // the stored row wins iff it sorts strictly first under the
+        // window's `version desc` (nulls last)
+        val newer = keyCols.map(k => col(k) <=> col("__s_" + k))
+          .reduce(_ && _) && (sv > v || (v.isNull && sv.isNotNull))
+        winners.join(stored, newer, "left_anti")
+          .withColumn(op, when(col(op) === "U", "U").otherwise("D"))
     }
-    // stage write: the live table is read-only during this — the merge
-    // plan reads `table`, the writer targets `table__stage` — so no
-    // lineage checkpoint is needed and a failure here costs nothing.
-    // A string partCol is created as VARCHAR, not the dialect's LOB
-    // default: Derby-class engines cannot COMPARE a CLOB, and both the
-    // pushed IN filter and the scoped DELETE compare the partition
-    // column. Partition values are short identifiers by contract
-    // (a date, a source, a bucket id) — 1024 is generous headroom, and
-    // an oversized value fails loudly at the write, never silently.
-    val stageTypes = partCol
-      .filter(p => batch.schema(p).dataType ==
-        org.apache.spark.sql.types.StringType)
-      .map(p => s"$p VARCHAR(1024)")
-    writeRaw(merged, url, stage, numPartitions, props, stageTypes)
-    // install: one transaction, previous state survives any crash
-    // strictly before the commit
+    // Derby-class engines can neither compare nor index a CLOB, the
+    // dialect's default for strings, and Spark's JDBC writer binds a
+    // NULL string as a CLOB, which a VARCHAR column refuses. So each
+    // string key is matched through a VARCHAR copy beside it, with
+    // NULL written as '' and told apart by the key itself being NULL.
+    val matchCol: Map[String, String] =
+      if (!tableExists) Map.empty
+      else keyCols.filter(k => batch.schema(k).dataType == StringType)
+        .zipWithIndex.map { case (k, i) => k -> s"__key$i" }.toMap
+    val staged = matchCol.foldLeft(survivors) { case (df, (k, m)) =>
+      df.withColumn(m, coalesce(col(k), lit("")))
+    }
+    // a first CDC load creates a string partCol as VARCHAR, so later
+    // calls can push their IN filter on it
+    val stageTypes = Some((matchCol.values.map(m => s"$m VARCHAR($MaxStringKey)") ++
+      opCol.filter(_ => tableExists).map(op => s"$op VARCHAR(1)") ++
+      partCol.filter(p => !tableExists && opCol.isDefined &&
+        batch.schema(p).dataType == StringType)
+        .map(p => s"$p VARCHAR($MaxStringKey)")).mkString(", "))
+      .filter(_.nonEmpty)
+    // the live table is read-only during the stage write, so a failure
+    // here costs nothing
+    writeRaw(staged, url, stage, numPartitions, props, stageTypes)
     if (!tableExists) {
       inTransaction(url, props) { conn =>
         renameTable(conn, stage, table)
         txnHook(conn)
       }
-    } else touched.zip(partCol) match {
-      case Some((vals, p)) =>
-        // delta install: delete ONLY touched partitions, refill from
-        // the stage (which holds exactly those partitions' merged
-        // rows). Untouched partitions are never rewritten.
-        inTransaction(url, props) { conn =>
-          // chunked IN lists: SQLite-class targets cap bind variables
-          // (999 historically); several DELETEs inside the ONE
-          // transaction are exactly as atomic as one
-          vals.grouped(500).foreach { chunk =>
-            val in = chunk.map(_ => "?").mkString(", ")
-            val del = conn.prepareStatement(
-              s"""DELETE FROM $table WHERE "$p" IN ($in)""")
-            try {
-              chunk.zipWithIndex.foreach { case (v, i) =>
-                del.setObject(i + 1, v)
-              }
-              del.executeUpdate()
-            } finally del.close()
-          }
-          val colList = merged.columns.map(c => "\"" + c + "\"").mkString(", ")
-          val ins = conn.createStatement()
-          try ins.executeUpdate(
-            s"INSERT INTO $table ($colList) SELECT $colList FROM $stage")
-          finally ins.close()
-          txnHook(conn)
+    } else {
+      inTransaction(url, props) { conn =>
+        // the index makes the EXISTS below a probe per live row rather
+        // than a stage scan per live row
+        val indexed = keyCols.map(k => quoted(matchCol.getOrElse(k, k)))
+        update(conn, s"CREATE INDEX ${stage}_key ON $stage (${indexed.mkString(", ")})")
+        val derby = isDerby(conn)
+        def live(k: String) = s"$table.${quoted(liveCol(k.toLowerCase))}"
+        def eq(k: String) = matchCol.get(k) match {
+          // CAST truncates silently: one character past the longest
+          // staged key keeps a longer live key from matching
+          case Some(m) =>
+            val l = if (derby) s"CAST(${live(k)} AS VARCHAR(${MaxStringKey + 1}))"
+              else live(k)
+            s"s.${quoted(m)} = $l AND s.${quoted(k)} IS NOT NULL"
+          case None => s"s.${quoted(k)} = ${live(k)}"
         }
-        dropIfExists(url, stage, props)
-      case None =>
-        // full install: rename pair in ONE transaction — the table is
-        // either entirely the old state or entirely the new one
-        inTransaction(url, props) { conn =>
-          renameTable(conn, table, old)
-          renameTable(conn, stage, table)
-          txnHook(conn)
+        update(conn, s"DELETE FROM $table WHERE EXISTS (SELECT 1 " +
+          s"FROM $stage s WHERE ${keyCols.map(eq).mkString(" AND ")})")
+        // `=` never matches NULL: a NULL key takes its own statement, run
+        // only when the stage holds one, so the one above keeps its index
+        // probe
+        val anyNull = keyCols.map(k => s"${quoted(k)} IS NULL").mkString(" OR ")
+        if (query(conn, s"SELECT COUNT(*) FROM $stage WHERE $anyNull") > 0) {
+          val nullSafe = keyCols.map(k =>
+            s"((${eq(k)}) OR (s.${quoted(k)} IS NULL AND ${live(k)} IS NULL))")
+          update(conn, s"DELETE FROM $table WHERE " +
+            s"(${keyCols.map(k => s"${live(k)} IS NULL").mkString(" OR ")}) " +
+            s"AND EXISTS (SELECT 1 FROM $stage s WHERE ${nullSafe.mkString(" AND ")})")
         }
-        dropIfExists(url, old, props)
+        val upserts = opCol.fold("")(op => s" WHERE ${quoted(op)} = 'U'")
+        update(conn, s"INSERT INTO $table " +
+          s"(${dataCols.map(c => quoted(liveCol(c.toLowerCase))).mkString(", ")}) " +
+          s"SELECT ${dataCols.map(quoted).mkString(", ")} FROM $stage$upserts")
+        txnHook(conn)
+      }
+      dropIfExists(url, stage, props)
     }
+  }
+
+  /** Longest string key the stage holds (and string partCol a first
+    * CDC load creates). */
+  private val MaxStringKey = 1024
+
+  /** Distinct `p` values of the batch: small by the partCol contract (a
+    * batch clusters in few partitions), so the collect is bounded. The
+    * cap makes a broken contract fail LOUDLY instead of collecting
+    * without bound: a batch touching >10k partitions means partCol is
+    * not a partition column for this workload. */
+  private def touchedPartitions(batch: DataFrame, p: String): Seq[Any] = {
+    import org.apache.spark.sql.functions.col
+    val vals = batch.select(col(p)).distinct().limit(10001)
+      .collect().map(_.get(0)).toSeq
+    require(vals.size <= 10000,
+      s"batch touches >10000 distinct '$p' partitions — partCol is " +
+        "not clustering this workload; drop partCol")
+    // NULL never matches the pushed IN filter, so the stored versions
+    // of NULL-partition keys would go unread and a stale change for
+    // such a key would win. Fail loudly, like the partition-count cap.
+    require(!vals.contains(null),
+      s"batch contains NULL '$p' partition values — NULL never " +
+        "matches the pushed IN filter, so stale changes could beat " +
+        "stored versions; map NULL to a sentinel value or drop partCol")
+    vals
   }
 
   /** Exactly-once foreachBatch terminal hop: apply `batch` via
@@ -329,13 +344,29 @@ object Sinks {
     * the rename runs inside. */
   private def renameTable(conn: java.sql.Connection, from: String,
       to: String): Unit = {
-    val product = Option(conn.getMetaData.getDatabaseProductName)
-      .getOrElse("").toLowerCase
-    val sql =
-      if (product.contains("derby")) s"RENAME TABLE $from TO $to"
-      else s"ALTER TABLE $from RENAME TO $to"
+    update(conn,
+      if (isDerby(conn)) s"RENAME TABLE $from TO $to"
+      else s"ALTER TABLE $from RENAME TO $to")
+  }
+
+  private def isDerby(conn: java.sql.Connection): Boolean =
+    Option(conn.getMetaData.getDatabaseProductName)
+      .getOrElse("").toLowerCase.contains("derby")
+
+  private def quoted(c: String): String = "\"" + c + "\""
+
+  private def update(conn: java.sql.Connection, sql: String): Unit = {
     val st = conn.createStatement()
     try st.executeUpdate(sql) finally st.close()
+  }
+
+  /** The first column of the first row of a one-number query. */
+  private def query(conn: java.sql.Connection, sql: String): Long = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(sql)
+      try { rs.next(); rs.getLong(1) } finally rs.close()
+    } finally st.close()
   }
 
   private def dropIfExists(url: String, table: String,

@@ -52,18 +52,38 @@ class DfCacheSpec extends SparkSpec {
   }
 
   test("upsertJdbc rejects NULL partition values loudly") {
+    // CDC mode reads stored versions scoped by partCol's pushed IN
+    // filter; a NULL partition never matches it, so a stale change for
+    // a NULL-partition key would beat its stored version
     val url = "jdbc:derby:memory:graft_nullpart;create=true"
-    val seed = Seq((1L, "d1", "a", 1)).toDF("id", "day", "v", "ver")
+    val seed = Seq((1L, "d1", "a", 1, "U")).toDF("id", "day", "v", "ver", "op")
     Sinks.upsertJdbc(spark, seed, url, "t", Seq("id"), "ver",
-      numPartitions = 1, partCol = Some("day"))
-    val withNull = Seq((2L, null.asInstanceOf[String], "b", 1))
-      .toDF("id", "day", "v", "ver")
+      numPartitions = 1, partCol = Some("day"), opCol = Some("op"))
+    val withNull = Seq((2L, null.asInstanceOf[String], "b", 1, "U"))
+      .toDF("id", "day", "v", "ver", "op")
     val e = intercept[IllegalArgumentException] {
       Sinks.upsertJdbc(spark, withNull, url, "t", Seq("id"), "ver",
-        numPartitions = 1, partCol = Some("day"))
+        numPartitions = 1, partCol = Some("day"), opCol = Some("op"))
     }
     assert(e.getMessage.contains("NULL"))
     // the live table is untouched by the refused merge
     assert(Sinks.readJdbc(spark, url, "t").count() === 1L)
+  }
+
+  test("upsertJdbc lands a NULL partition value in upsert mode") {
+    // upsert mode reads nothing back, so partCol scopes nothing and a
+    // NULL partition value is just a value: the key is replaced once
+    val url = "jdbc:derby:memory:graft_nullpart_up;create=true"
+    val seed = Seq((1L, "d1", "a", 1), (2L, "d1", "b", 1))
+      .toDF("id", "day", "v", "ver")
+    Sinks.upsertJdbc(spark, seed, url, "t", Seq("id"), "ver",
+      numPartitions = 1, partCol = Some("day"))
+    val withNull = Seq((1L, null.asInstanceOf[String], "a2", 2))
+      .toDF("id", "day", "v", "ver")
+    Sinks.upsertJdbc(spark, withNull, url, "t", Seq("id"), "ver",
+      numPartitions = 1, partCol = Some("day"))
+    val back = Sinks.readJdbc(spark, url, "t").orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2)))
+    assert(back.toSeq === Seq((1L, None, "a2"), (2L, Some("d1"), "b")))
   }
 }

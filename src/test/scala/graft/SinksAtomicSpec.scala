@@ -1,12 +1,15 @@
 package graft
 
 import graft.sources.Sinks
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution,
+  RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Failure semantics of the atomic JDBC upsert (the reference's
   * terminal hop): the live table must survive a crash anywhere before
-  * the install transaction commits, and a partition-scoped install
-  * must never touch partitions outside the batch. */
+  * the install transaction commits, and the key-scoped install must
+  * never touch a row whose key is outside the batch. */
 class SinksAtomicSpec extends SparkSpec {
   import spark.implicits._
 
@@ -48,9 +51,9 @@ class SinksAtomicSpec extends SparkSpec {
     Sinks.upsertJdbc(spark, v1, url, "t", Seq("id"), "ver",
       numPartitions = 1, partCol = Some("part"))
     // canary: a row in partition pb inserted OUTSIDE the upsert path.
-    // A table-wide DELETE would remove it and the merge output (which
-    // only covers pa) would never reinsert it — so its survival proves
-    // the DELETE is scoped to touched partitions.
+    // A table-wide DELETE would remove it and the stage (which holds
+    // only the batch's keys) would never reinsert it — so its survival
+    // proves the DELETE is scoped to the batch's keys.
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
@@ -66,20 +69,80 @@ class SinksAtomicSpec extends SparkSpec {
       (10L, "pb", 1), (11L, "pc", 1), (99L, "pb", 7)))
   }
 
+  /** Every physical node of every query `body` executes (adaptive
+    * plans included), captured by a listener. */
+  private def executedNodes(body: => Unit): Seq[SparkPlan] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(
+        spark.sparkContext, 60000L)
+      spark.listenerManager.unregister(listener)
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    plans.synchronized(plans.toList)
+      .flatMap(qe => helper.collect(qe.executedPlan) { case p => p })
+  }
+
+  /** The JDBC scans of `table` among `nodes`. */
+  private def jdbcScans(nodes: Seq[SparkPlan], table: String) =
+    nodes.collect { case s: RowDataSourceScanExec
+      if s.relation.toString.contains(s"JDBCRelation($table)") => s }
+
   test("the existing-side read is scoped to touched partitions") {
-    // the delta path must read only `partCol IN (touched)` rows from
-    // the sink — the O(delta) half of the claim. Observable via the
-    // JDBC relation's pushed filter on a read built the same way.
+    // CDC needs stored versions: the read of the live table must carry
+    // the pushed `partCol IN (touched)` filter and read only the key
+    // and version columns, whatever else the table holds
     val url = "jdbc:derby:memory:graft_atomic3;create=true"
+    val v1 = Seq((1L, "pa", "x", 1, "U"), (10L, "pb", "y", 1, "U"),
+      (20L, "pc", "z", 1, "U")).toDF("id", "part", "payload", "ver", "op")
+    Sinks.upsertJdbc(spark, v1, url, "t3", Seq("id"), "ver",
+      numPartitions = 1, partCol = Some("part"), opCol = Some("op"))
+    val batch = Seq((1L, "pa", "x2", 2, "U"), (11L, "pb", "w", 1, "U"))
+      .toDF("id", "part", "payload", "ver", "op")
+    val scans = jdbcScans(executedNodes {
+      Sinks.upsertJdbc(spark, batch, url, "t3", Seq("id"), "ver",
+        numPartitions = 1, partCol = Some("part"), opCol = Some("op"))
+    }, "t3")
+    assert(scans.nonEmpty, "the CDC call must read the stored versions")
+    scans.foreach { s =>
+      val cols = s.requiredSchema.fieldNames.toSeq
+      val pushed = s.handledFilters.mkString(", ")
+      assert(cols.sorted === Seq("id", "ver"),
+        s"only key and version columns may be read: $cols")
+      assert(pushed.contains("In(part") && pushed.contains("pa") &&
+        pushed.contains("pb") && !pushed.contains("pc"),
+        s"IN filter over the touched partitions must reach the JDBC scan: $pushed")
+    }
+    val back = Sinks.readJdbc(spark, url, "t3").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(2), r.getInt(3))).toSeq
+    assert(back === Seq((1L, "x2", 2), (10L, "y", 1), (11L, "w", 1), (20L, "z", 1)))
+  }
+
+  test("an upsert-mode call plans no scan of the target table") {
+    // the batch always wins in upsert mode, so the live table is never
+    // read: the install is O(batch) however large the table is
+    val url = "jdbc:derby:memory:graft_atomic5;create=true"
     val v1 = Seq((1L, "pa", 1), (10L, "pb", 1)).toDF("id", "part", "ver")
-    Sinks.upsertJdbc(spark, v1, url, "t", Seq("id"), "ver",
+    Sinks.upsertJdbc(spark, v1, url, "t5", Seq("id"), "ver",
       numPartitions = 1, partCol = Some("part"))
-    val scoped = Sinks.readJdbc(spark, url, "t")
-      .filter(col("part").isin("pa"))
-    val plan = scoped.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("part"),
-      s"IN filter must reach the JDBC scan:\n$plan")
-    assert(scoped.count() === 1L)
+    val batch = Seq((1L, "pa", 2), (2L, "pa", 1)).toDF("id", "part", "ver")
+    val nodes = executedNodes {
+      Sinks.upsertJdbc(spark, batch, url, "t5", Seq("id"), "ver",
+        numPartitions = 1, partCol = Some("part"))
+    }
+    // the stage write, which scans the batch, was captured
+    assert(nodes.exists(_.isInstanceOf[LocalTableScanExec]),
+      "the stage write's plan was not captured")
+    assert(jdbcScans(nodes, "t5").isEmpty,
+      s"upsert mode scanned the live table:\n${nodes.mkString("\n")}")
+    assert(rows(url, "t5") === Seq((1L, "pa", 2), (2L, "pa", 1), (10L, "pb", 1)))
   }
 
   test("exactly-once: a recorded batchId is skipped, an unrecorded crash re-applies") {

@@ -70,12 +70,12 @@ class SinksSpec extends SparkSpec {
     val back = Sinks.readJdbc(spark, url, "cdc").orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(back.toSeq === Seq((2L, "b3"), (3L, "c"), (4L, "d")))
-    // a later batch whose final change is a delete removes the key even
-    // through the partition-scoped delta path
+    // a later batch whose final change is a delete removes the key,
+    // also when partCol scopes the stored-version read
     val del = Seq((2L, "x", 9L, "D")).toDF("id", "name", "seq", "op")
       .withColumn("pg", (col("id") % 2).cast("int"))
     val withPg = Sinks.readJdbc(spark, url, "cdc")
-    // migrate table to carry pg (full-path merge adds the column)
+    // copy the table into one that carries pg
     Sinks.upsertJdbc(spark,
       withPg.withColumn("pg", (col("id") % 2).cast("int"))
         .withColumn("op", lit("U")),
@@ -85,7 +85,7 @@ class SinksSpec extends SparkSpec {
     val after = Sinks.readJdbc(spark, url, "cdc2").orderBy("id").collect()
       .map(_.getLong(0))
     assert(after.toSeq === Seq(3L, 4L),
-      "delta-path delete must remove the key and leave untouched partitions")
+      "a partCol-scoped delete must remove the key and leave the others")
   }
 
   test("jdbc CDC merge: a stale-version change never beats newer stored state") {
@@ -110,6 +110,139 @@ class SinksSpec extends SparkSpec {
     assert(back.toSeq === Seq((1L, "new-a", 5L), (2L, "same-ver", 5L)),
       "stale 'D'/'U' must lose to the stored version; same-version " +
         "redelivery resolves to the batch row")
+  }
+
+  private def jdbcUpdate(url: String, sql: String): Unit = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.executeUpdate(sql) finally st.close()
+    } finally conn.close()
+  }
+
+  private def jdbcColumnType(url: String, table: String, column: String): String = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getColumns(null, null, table.toUpperCase, column)
+      try { assert(rs.next(), s"no column $table.$column"); rs.getString("TYPE_NAME") }
+      finally rs.close()
+    } finally conn.close()
+  }
+
+  private def jdbcHasTable(url: String, table: String): Boolean = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, table.toUpperCase, null)
+      try rs.next() finally rs.close()
+    } finally conn.close()
+  }
+
+  test("jdbc upsert replaces a CLOB string key in place and keeps keys outside the batch") {
+    val url = "jdbc:derby:memory:graftkeyclob;create=true"
+    Sinks.writeJdbc(Seq(("a", 1L, 1.0), ("b", 1L, 2.0)).toDF("name", "ts", "score"),
+      url, "people", numPartitions = 1)
+    // Spark's Derby dialect creates strings as CLOB, which Derby cannot
+    // compare: the install must still match the key
+    assert(jdbcColumnType(url, "people", "name") === "CLOB")
+    // canary: a key outside the batch, inserted outside the sink
+    jdbcUpdate(url,
+      """INSERT INTO people ("name", "ts", "score") VALUES ('zz-canary', 7, 9.5)""")
+    val batch = Seq(("b", 2L, 3.0), ("c", 1L, 4.0), ("b", 3L, 5.0))
+      .toDF("name", "ts", "score")
+    Sinks.upsertJdbc(spark, batch, url, "people", Seq("name"), "ts",
+      numPartitions = 1)
+    val back = Sinks.readJdbc(spark, url, "people").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
+    assert(back.toSeq === Seq(("a", 1L, 1.0), ("b", 3L, 5.0), ("c", 1L, 4.0),
+      ("zz-canary", 7L, 9.5)))
+  }
+
+  test("jdbc upsert: a NULL-key batch row replaces the stored NULL-key row") {
+    val url = "jdbc:derby:memory:graftkeynull;create=true"
+    // the empty key is a key like any other, not a stand-in for NULL
+    Sinks.writeJdbc(Seq((null: String, 1L, 1.0), ("a", 1L, 2.0), ("", 1L, 7.0))
+      .toDF("name", "ts", "score"), url, "nk", numPartitions = 1)
+    def back = Sinks.readJdbc(spark, url, "nk").collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getDouble(2)))
+      .sortBy(r => (r._1.isDefined, r._1.getOrElse(""))).toSeq
+    Sinks.upsertJdbc(spark, Seq((null: String, 2L, 3.0), ("b", 1L, 4.0))
+      .toDF("name", "ts", "score"), url, "nk", Seq("name"), "ts",
+      numPartitions = 1)
+    assert(back === Seq((None, 2L, 3.0), (Some(""), 1L, 7.0), (Some("a"), 1L, 2.0),
+      (Some("b"), 1L, 4.0)))
+    Sinks.upsertJdbc(spark, Seq((null: String, 3L, 5.0)).toDF("name", "ts", "score"),
+      url, "nk", Seq("name"), "ts", numPartitions = 1)
+    assert(back === Seq((None, 3L, 5.0), (Some(""), 1L, 7.0), (Some("a"), 1L, 2.0),
+      (Some("b"), 1L, 4.0)))
+  }
+
+  test("jdbc upsert with a two-column key replaces exactly the batch's keys") {
+    val url = "jdbc:derby:memory:graftkey2;create=true"
+    Sinks.writeJdbc(Seq((1L, "x", 1, "a"), (1L, "y", 1, "b"), (2L, "x", 1, "c"),
+        (3L, null, 1, "d"), (3L, "z", 1, "f")).toDF("k1", "k2", "ver", "v"),
+      url, "two", numPartitions = 1)
+    val batch = Seq((1L, "x", 2, "a2"), (3L, null, 2, "d2"), (4L, "x", 1, "e"))
+      .toDF("k1", "k2", "ver", "v")
+    Sinks.upsertJdbc(spark, batch, url, "two", Seq("k1", "k2"), "ver",
+      numPartitions = 1)
+    val back = Sinks.readJdbc(spark, url, "two").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getInt(2), r.getString(3)))
+      .sortBy(r => (r._1, r._2.getOrElse(""))).toSeq
+    assert(back === Seq((1L, Some("x"), 2, "a2"), (1L, Some("y"), 1, "b"),
+      (2L, Some("x"), 1, "c"), (3L, None, 2, "d2"), (3L, Some("z"), 1, "f"),
+      (4L, Some("x"), 1, "e")))
+  }
+
+  test("jdbc upsert into a hand-made table matches its columns by name, any case") {
+    val url = "jdbc:derby:memory:graftkeyddl;create=true"
+    // unquoted DDL: Derby stores the names upper-cased, the key as VARCHAR
+    jdbcUpdate(url, "CREATE TABLE ddl (ID BIGINT, NAME VARCHAR(20), VER INT)")
+    jdbcUpdate(url, "INSERT INTO ddl VALUES (1, 'a', 1), (2, 'b', 1)")
+    Sinks.upsertJdbc(spark, Seq(("b", 2L, 2), ("c", 3L, 1)).toDF("name", "id", "ver"),
+      url, "ddl", Seq("name"), "ver", numPartitions = 1)
+    val back = Sinks.readJdbc(spark, url, "ddl").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq
+    assert(back === Seq((1L, "a", 1), (2L, "b", 2), (3L, "c", 1)))
+  }
+
+  test("jdbc upsert refuses a batch whose columns differ from the table's") {
+    val url = "jdbc:derby:memory:graftkeycols;create=true"
+    Sinks.upsertJdbc(spark, Seq((1L, "a", 1)).toDF("id", "name", "ver"),
+      url, "cols", Seq("id"), "ver", numPartitions = 1)
+    def back = Sinks.readJdbc(spark, url, "cols").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+    val missing = Seq((1L, 2)).toDF("id", "ver")
+    val extra = Seq((1L, "b", 2, "x")).toDF("id", "name", "ver", "more")
+    for (b <- Seq(missing, extra)) {
+      val e = intercept[IllegalArgumentException] {
+        Sinks.upsertJdbc(spark, b, url, "cols", Seq("id"), "ver", numPartitions = 1)
+      }
+      assert(e.getMessage.contains("do not match"))
+      assert(back === Seq((1L, "a", 1)))
+      assert(!jdbcHasTable(url, "cols__stage"), "refused before any write")
+    }
+  }
+
+  test("jdbc upsert: the longest allowed string key round-trips, a longer one fails first") {
+    val url = "jdbc:derby:memory:graftkeylong;create=true"
+    val longest = "k" * 1024
+    val wide = "\u00e9" * 1024          // two bytes a character in UTF-8
+    val clobOnly = longest + "x" * 476  // held by the live CLOB column only
+    Sinks.writeJdbc(Seq((longest, 1L), (clobOnly, 1L), ("short", 1L)).toDF("name", "ts"),
+      url, "longk", numPartitions = 1)
+    def back = Sinks.readJdbc(spark, url, "longk").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    Sinks.upsertJdbc(spark, Seq((longest, 2L), (wide, 1L)).toDF("name", "ts"),
+      url, "longk", Seq("name"), "ts", numPartitions = 1)
+    Sinks.upsertJdbc(spark, Seq((wide, 2L)).toDF("name", "ts"),
+      url, "longk", Seq("name"), "ts", numPartitions = 1)
+    val want = Map(longest -> 2L, wide -> 2L, clobOnly -> 1L, "short" -> 1L)
+    assert(back === want)
+    intercept[Exception] {
+      Sinks.upsertJdbc(spark, Seq(("k" * 1025, 3L), ("short", 3L)).toDF("name", "ts"),
+        url, "longk", Seq("name"), "ts", numPartitions = 1)
+    }
+    assert(back === want, "an over-long key must fail before the install")
   }
 
   test("csv reader round-trips with an explicit schema") {
